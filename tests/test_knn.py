@@ -113,22 +113,91 @@ def test_knn_polar_center_near_antimeridian(spark):
     _run(spark, grid, centers, k=8, expect_epsg=_ell.EPSG_NORTH)
 
 
-def test_knn_plan_is_cell_hash_join_not_nested_loop(spark):
-    """VERDICT r3 ask #3: the candidate join must be a Broadcast HASH join
-    on cell_id, never a BroadcastNestedLoopJoin over four range predicates
-    (which tests every pixel against every center)."""
-    from xagg_spark.operators.knn import _ring_candidates
+def _broadcast_subtrees(plan: str):
+    """Lines under each BroadcastExchange node of a plan tree string."""
+    lines = plan.splitlines()
+    depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    for i, ln in enumerate(lines):
+        if ln.lstrip(" :+-").startswith("BroadcastExchange"):
+            sub = []
+            for ln2, d in zip(lines[i + 1:], depth[i + 1:]):
+                if d <= depth[i]:
+                    break
+                sub.append(ln2)
+            yield sub
 
+
+def _dense_case(spark):
+    """400 pixels against 30 centers whose radius-matched ring covers hold
+    well over 400 (q_id, cell) rows: the pixel table is the smaller join
+    side."""
     grid = GridSpec(lat_edge=-10.0, lon_edge=-10.0, dlat=1.0, dlon=1.0,
                     nlat=20, nlon=20, tile_h=20, tile_w=20)
     pixels = pixel_geometry(spark, grid).select("pix_idx", "lat", "lon")
-    pending = pd.DataFrame({"q_id": np.array([0], dtype=np.int64),
-                            "c_lon": [1.0], "c_lat": [1.0]})
-    j = _ring_candidates(spark, pixels, pending, radius=2.0, res=6,
-                         epsg=_ell.EPSG_GLOBAL, wrap_lon=False)
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan and "cell_id" in plan
+    i = np.arange(30, dtype=np.int64)
+    centers = pd.DataFrame({"q_id": i,
+                            "c_lon": -8.75 + (i % 6) * 3.125,
+                            "c_lat": -8.375 + (i // 6) * 3.875})
+    return grid, pixels, centers
+
+
+def test_knn_plan_is_cell_hash_join_not_nested_loop(spark, monkeypatch):
+    """The candidate join knn_pixels executes is a Broadcast HASH join on
+    cell_id, never a BroadcastNestedLoopJoin over four range predicates
+    (which tests every pixel against every center) — and with fewer
+    pixels than cover rows the PIXELS are the broadcast side: no
+    BroadcastExchange sits over the cover's Generate (the planner's size
+    estimate once put a 6.25M-row cover on the build side)."""
+    from xagg_spark.operators import knn as _knn
+
+    seen = []
+    topk = _knn._topk_struct_agg
+
+    def spy(j, k):
+        seen.append(topk(j, k))
+        return seen[-1]
+
+    monkeypatch.setattr(_knn, "_topk_struct_agg", spy)
+    grid, pixels, centers = _dense_case(spark)
+    assert pixels.count() < _knn._cover_row_count(centers, 2.0,
+                                                   _knn._matched_resolution(2.0))
+    got = knn_pixels(spark, pixels, centers, k=4, radius_deg=2.0)
+    assert got.count() == 4 * len(centers)
+    assert seen
+    for top in seen:
+        plan = top._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "BroadcastHashJoin" in plan and "cell_id" in plan
+        assert "Generate" in plan
+        subs = list(_broadcast_subtrees(plan))
+        assert subs, plan
+        for sub in subs:
+            assert not any("Generate" in ln for ln in sub), plan
+
+
+def test_knn_logs_one_decision_record_per_iteration(spark, caplog):
+    """Each expansion iteration emits one structured DEBUG record of its
+    decisions; with fewer pixels than cover rows the build side is the
+    pixel table, and every query is confirmed exactly once."""
+    import logging
+
+    caplog.set_level(logging.DEBUG, logger="xagg_spark.operators.knn")
+    grid, pixels, centers = _dense_case(spark)
+    knn_pixels(spark, pixels, centers, k=4, radius_deg=2.0)
+    recs = [r.knn for r in caplog.records if hasattr(r, "knn")]
+    assert recs
+    assert all(r.levelno == logging.DEBUG and r.name == "xagg_spark.operators.knn"
+               for r in caplog.records if hasattr(r, "knn"))
+    first = recs[0]
+    assert set(first) == {"radius_deg", "resolution", "pending", "cover_rows",
+                          "pixel_rows", "build_side", "confirmed"}
+    assert first["radius_deg"] == 2.0 and first["pending"] == len(centers)
+    assert first["pixel_rows"] == grid.nlat * grid.nlon < first["cover_rows"]
+    assert first["build_side"] == "pixels"
+    assert sum(r["confirmed"] for r in recs) == len(centers)
+    assert [r["radius_deg"] for r in recs] == [2.0 * 2 ** i
+                                               for i in range(len(recs))]
 
 
 def test_knn_cea_near_antimeridian_keeps_cut_plane_semantics(spark):
@@ -148,16 +217,43 @@ def test_knn_cea_near_antimeridian_keeps_cut_plane_semantics(spark):
     _run(spark, grid, centers, k=6, expect_epsg=_ell.EPSG_GLOBAL)
 
 
-def test_cover_rows_matches_scalar_cover_bbox():
-    """The vectorized ragged ring-cover expansion must produce exactly the
-    per-center cell sets of geo.cells.cover_bbox (wrap, clamping, full-
-    circle dedup included) for a wide sweep of centers, radii, and
-    resolutions — pure numpy, no Spark."""
+def _cover_rows(centers, radius, res):
+    """Reference ring cover: per-center cell sets of the scalar
+    geo.cells.cover_bbox (wrap, pole clamping, full-circle dedup), as a
+    set of (q_id, cell_id) pairs."""
     from xagg_spark.geo import cells as _c
-    from xagg_spark.operators.knn import _cover_rows
 
+    rows = set()
+    for r in centers.itertuples():
+        cells = _c.cover_bbox(
+            float(r.c_lon) - radius, max(float(r.c_lat) - radius, -90.0),
+            float(r.c_lon) + radius, min(float(r.c_lat) + radius, 90.0),
+            res)
+        rows.update((int(r.q_id), int(c)) for c in cells.tolist())
+    return rows
+
+
+def _check_cover(spark, centers, radius, res):
+    from xagg_spark.operators.knn import _cover_df_jvm, _cover_row_count
+
+    got, _ = _cover_df_jvm(spark, centers, radius, res, 6933)
+    got = got.select("q_id", "cell_id").toPandas()
+    mine = set(zip(got.q_id.astype(int).tolist(),
+                   got.cell_id.astype(int).tolist()))
+    assert mine == _cover_rows(centers, radius, res), (res, radius)
+    # no duplicate (q, cell) pairs (a dup would double-rank a pixel)
+    assert not got.duplicated(["q_id", "cell_id"]).any()
+    assert len(got) == _cover_row_count(centers, radius, res), (res, radius)
+
+
+def test_cover_rows_matches_scalar_cover_bbox(spark):
+    """The cluster-built ring cover rows must be exactly the per-center
+    cell sets of geo.cells.cover_bbox (wrap, pole clamping, full-circle
+    dedup included) for a wide seeded sweep of centers, radii and
+    resolutions, with no duplicate (q, cell) pair and exactly
+    _cover_row_count rows."""
     rng = np.random.default_rng(20260817)
-    for trial in range(25):
+    for _ in range(25):
         res = int(rng.integers(0, 10))
         n_c = int(rng.integers(1, 9))
         radius = float(rng.choice([0.05, 0.7, 3.0, 20.0, 95.0, 181.0, 360.0]))
@@ -166,16 +262,20 @@ def test_cover_rows_matches_scalar_cover_bbox():
             "c_lon": rng.uniform(-200.0, 220.0, n_c),   # raw frames too
             "c_lat": rng.uniform(-89.9, 89.9, n_c),
         })
-        got = _cover_rows(centers, radius, res)
-        for r in centers.itertuples():
-            want = set(_c.cover_bbox(
-                float(r.c_lon) - radius, max(float(r.c_lat) - radius, -90.0),
-                float(r.c_lon) + radius, min(float(r.c_lat) + radius, 90.0),
-                res).tolist())
-            mine = set(got[got.q_id == r.q_id].cell_id.tolist())
-            assert mine == want, (trial, res, radius, r)
-        # no duplicate (q, cell) pairs (a dup would double-rank a pixel)
-        assert not got.duplicated(["q_id", "cell_id"]).any()
+        _check_cover(spark, centers, radius, res)
+
+
+def test_cover_df_jvm_matches_cover_rows(spark):
+    """The distributed (JVM sequence/explode) cover must produce exactly
+    the reference cover rows for antimeridian-wrapping boxes and
+    pole-clamped lats."""
+    centers = pd.DataFrame({
+        "q_id": np.arange(6, dtype=np.int64),
+        "c_lon": [179.8, -179.9, 0.25, -38.0, 100.0, -0.125],
+        "c_lat": [10.0, -5.5, 89.95, -89.9, 0.0, 45.125],
+    })
+    for radius, res in ((0.2, 11), (0.7, 8), (3.0, 5), (20.0, 2)):
+        _check_cover(spark, centers, radius, res)
 
 
 def test_knn_warns_on_under_k_and_zero_row_queries(spark):
@@ -197,24 +297,26 @@ def test_knn_warns_on_under_k_and_zero_row_queries(spark):
 
 def test_knn_driver_side_scales_to_1m_centers():
     """VERDICT r4 ask #5 (driver half): at 10^6 pending centers the
-    per-iteration driver work — coarsening decision, verified-radius
-    computation — must stay around a second, and the mode decision must
-    pick the SHUFFLE cover path: the per-center cover floors at ~4 cells,
-    so no resolution fits 10^6 centers in the broadcast budget, and the
-    old unbounded coarsening walked res to 0 (one global cell — a
+    per-iteration driver work — exact cover-row count, build-side
+    decision, verified-radius computation — must stay around a second,
+    and over 2.88M pixels neither join side fits the broadcast budget:
+    the per-center cover floors at ~4 cells, so even MAX_COARSEN_LEVELS
+    of coarsening cannot fit 10^6 centers, and the coarsening stays
+    clamped (unbounded, it walked res to 0 — one global cell, a
     single-key cartesian of every pixel against every center).  Pure
-    numpy; the cluster half is the bench's knn_100k_centers entry and
+    numpy; the cluster half is the bench's knn_1m_centers entry and
     test_knn_shuffle_cover_path_matches_brute_force."""
     import time
 
-    from xagg_spark.operators.knn import (COVER_ROW_BUDGET,
-                                          MAX_COARSEN_LEVELS, _cover_rows,
+    from xagg_spark.operators.knn import (BROADCAST_ROW_BUDGET,
+                                          MAX_COARSEN_LEVELS,
+                                          _cover_extents, _cover_row_count,
                                           _matched_resolution,
                                           _min_edge_distance_m,
-                                          _per_center_cells,
-                                          _ring_resolution)
+                                          _pick_build_side)
 
     n = 1_000_000
+    n_pix = 2_880_000
     rng = np.arange(n, dtype=np.int64)
     centers = pd.DataFrame({
         "q_id": rng,
@@ -222,24 +324,28 @@ def test_knn_driver_side_scales_to_1m_centers():
         "c_lat": -85.0 + (rng // 2000) * 0.34,
     })
     radius = 0.2
-    res = _ring_resolution(radius, n)
-    # coarsening is CLAMPED (no walk to res 0) ...
-    assert res == _matched_resolution(radius) - MAX_COARSEN_LEVELS
-    # ... and the budget is still unreachable -> knn_pixels goes shuffle
-    assert n * _per_center_cells(radius, res) > COVER_ROW_BUDGET
-    # at 10^5 (the bench entry) the broadcast path still applies
-    res100k = _ring_resolution(radius, 100_000)
-    assert 100_000 * _per_center_cells(radius, res100k) <= COVER_ROW_BUDGET
+    matched = _matched_resolution(radius)
+    # no clamped resolution fits -> shuffled join at the matched res
+    assert (_cover_row_count(centers, radius, matched - MAX_COARSEN_LEVELS)
+            > BROADCAST_ROW_BUDGET)
+    res, rows, build = _pick_build_side(centers, radius, n_pix)
+    assert (res, build) == (matched, "none")
+    # at 10^5 (the bench entry) a coarsened cover still fits the budget
+    res100k, rows100k, build100k = _pick_build_side(centers[:100_000],
+                                                    radius, n_pix)
+    assert build100k == "cover" and rows100k <= BROADCAST_ROW_BUDGET
+    assert matched - MAX_COARSEN_LEVELS <= res100k < matched
     # warm-up: the first numpy call pays one-off page-allocation costs
     # (1.5-3s cold under memory pressure) that have nothing to do with
     # the per-row scaling this test pins
-    _cover_rows(centers[:1000], radius, res100k)
+    _cover_row_count(centers[:1000], radius, matched)
     _min_edge_distance_m(centers[:1000], radius, _ell.EPSG_GLOBAL)
     t0 = time.time()
-    cover = _cover_rows(centers[:100_000], radius, res100k)
+    n_cover = _cover_row_count(centers, radius, matched)
     t_cover = time.time() - t0
-    assert len(cover) <= COVER_ROW_BUDGET
-    assert cover["q_id"].nunique() == 100_000   # every center covered
+    assert n_cover == rows
+    _, nx, _, ny = _cover_extents(centers, radius, matched)
+    assert len(nx) == n and (nx * ny >= 1).all()   # every center covered
     t0 = time.time()
     verified = _min_edge_distance_m(centers, radius, _ell.EPSG_GLOBAL)
     t_verified = time.time() - t0
@@ -250,35 +356,18 @@ def test_knn_driver_side_scales_to_1m_centers():
     assert t_verified < 10.0, t_verified
 
 
-def test_cover_df_jvm_matches_cover_rows(spark):
-    """The distributed (JVM sequence/explode) cover must produce exactly
-    the same (q_id, cell_id) set as the driver-side numpy cover — both
-    are float64 with the same floor/ceil/pmod formulas — including
-    antimeridian-wrapping boxes and pole-clamped lats."""
-    from xagg_spark.operators.knn import _cover_df_jvm, _cover_rows
+def test_knn_shuffle_cover_path_matches_brute_force(spark, monkeypatch,
+                                                    caplog):
+    """End-to-end through the no-broadcast branch (broadcast budget forced
+    to 0 so every iteration takes the shuffled hash join): results must
+    equal the independent brute-force ranking — same contract as the
+    broadcast branches."""
+    import logging
 
-    centers = pd.DataFrame({
-        "q_id": np.arange(6, dtype=np.int64),
-        "c_lon": [179.8, -179.9, 0.25, -38.0, 100.0, -0.125],
-        "c_lat": [10.0, -5.5, 89.95, -89.9, 0.0, 45.125],
-    })
-    for radius, res in ((0.2, 11), (0.7, 8), (3.0, 5), (20.0, 2)):
-        want = _cover_rows(centers, radius, res)
-        got = _cover_df_jvm(spark, centers, radius, res, 6933).toPandas()
-        w = set(zip(want.q_id.tolist(), want.cell_id.tolist()))
-        g = set(zip(got.q_id.tolist(), got.cell_id.tolist()))
-        assert g == w, (radius, res)
-        # no duplicate (q, cell) pairs (a dup would double-rank a pixel)
-        assert not got.duplicated(["q_id", "cell_id"]).any()
-
-
-def test_knn_shuffle_cover_path_matches_brute_force(spark, monkeypatch):
-    """End-to-end through the SHUFFLE cover path (broadcast budget forced
-    to 0 so every iteration takes it): results must equal the independent
-    brute-force ranking — same contract as the broadcast path."""
     from xagg_spark.operators import knn as _knn
 
-    monkeypatch.setattr(_knn, "COVER_ROW_BUDGET", 0)
+    monkeypatch.setattr(_knn, "BROADCAST_ROW_BUDGET", 0)
+    caplog.set_level(logging.DEBUG, logger="xagg_spark.operators.knn")
     grid = GridSpec(lat_edge=-10.0, lon_edge=-10.0, dlat=1.0, dlon=1.0,
                     nlat=20, nlon=20, tile_h=20, tile_w=20)
     centers = pd.DataFrame({
@@ -296,6 +385,8 @@ def test_knn_shuffle_cover_path_matches_brute_force(spark, monkeypatch):
         "c_lat": [58.125, 71.25],
     })
     _run(spark, pgrid, pcenters, k=5, expect_epsg=_ell.EPSG_NORTH)
+    sides = {r.knn["build_side"] for r in caplog.records if hasattr(r, "knn")}
+    assert sides == {"none"}
 
 
 def test_knn_duplicate_q_id_rejected(spark):

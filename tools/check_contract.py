@@ -1,6 +1,7 @@
 """Local replica of the driver's correctness gate: run every queries() entry
 and its oracle_sql() twin on DuckDB, compare row count + sorted values."""
 
+import os
 import sys
 import time
 
@@ -8,7 +9,12 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# check the checkout this script lives in, wherever it is run from — in
+# the driver and in the Python workers, which import xagg_spark too
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -94,9 +100,8 @@ def main(sf_dir="/root/testdata/sf0.01", only=None):
 if __name__ == "__main__":
     # usage: check_contract.py [sf_dir] [query ...] — the first arg is a
     # data dir when it exists on disk, else a query-name filter
-    import os as _os
     args = sys.argv[1:]
     sf = "/root/testdata/sf0.01"
-    if args and ("/" in args[0] or _os.path.isdir(args[0])):
+    if args and ("/" in args[0] or os.path.isdir(args[0])):
         sf, args = args[0], args[1:]
     sys.exit(main(sf_dir=sf, only=set(args) or None))

@@ -401,19 +401,17 @@ def q_knn_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_tiles_shuffle_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J6 through the SHUFFLE cover path (round-5 scale fix): every
-    expansion iteration builds its ring cover ON the cluster (JVM
-    sequence/explode at the radius-matched resolution) and equi-joins it
-    without a broadcast — the path knn_pixels takes at 10^6+ centers,
-    where the round-4 coarsening loop degenerated to a single-key
-    cartesian.  Pinned with the explicit `_force_shuffle_cover` knob (no
-    module-global mutation, so a concurrently-running query can never
-    observe a patched budget).  The cover path may only change HOW
-    candidates are found, never the ranking, so the result must match
-    the same analytic oracle as the broadcast path (SQL_KNN)."""
+    """J6 through a MULTI-ITERATION ring expansion: the search starts at
+    0.25 deg (half a pixel), so no query is confirmed before the third
+    round (radius 1.0 deg), and each round builds its own cluster-built
+    (q_id, cell) cover at a coarser radius-matched resolution.  (The name
+    predates the single cover path: every cover is built on the cluster
+    now.)  The expansion schedule may only change HOW candidates are
+    found, never the ranking, so the result must match the same analytic
+    oracle as the default query (SQL_KNN)."""
     from .operators.knn import knn_pixels
     pixels, centers = _knn_fixture(spark)
-    out = knn_pixels(spark, pixels, centers, k=5, _force_shuffle_cover=True)
+    out = knn_pixels(spark, pixels, centers, k=5, radius_deg=0.25)
     return out.select(F.col("q_id").cast("long").alias("q_id"),
                       F.col("rank").cast("long").alias("rank"), "pix_idx")
 

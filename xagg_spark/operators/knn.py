@@ -8,27 +8,40 @@ latitude bbox by the same rule as the overlap join (J2: strictly-north ->
 EPSG:6931 LAEA, strictly-south -> 6932, else 6933 CEA) — the same q/K0/QP
 math as the overlap join, so the oracle can reproduce it analytically.
 
-Scale path (the actual cell-index ring expansion): each iteration covers
-every still-unconfirmed center's search box with equal-angle CELLS
-(geo.cells — the H3 ``grid_disk`` analogue) at a radius-matched resolution,
-pixels get the same cell id as a JVM column expression, and candidates come
-from an equi-join on cell_id — never a nested-loop range join, so cost is
-O(pixels_in_rings), not O(pixels x centers) per iteration (VERDICT r3 ask
-#3: 10^6 query points no longer degrade to an all-pairs scan).  The cover
-side adapts to the center count: below the broadcast budget it is built on
-the driver (vectorized numpy) and shipped as a Broadcast HASH join, with at
-most MAX_COARSEN_LEVELS of resolution coarsening to fit; past that (10^6+
-pending centers, where no resolution fits — the per-center cover floors at
-~4 cells) it is built ON THE CLUSTER with JVM sequence/explode at the
-radius-matched resolution and joined on cell_id — the PIXEL side is
-broadcast when it fits PIXEL_BROADCAST_MAX_ROWS (exchange-free), else a
-plain shuffle join (AQE picks the strategy and splits skewed cells).
+Candidate path (the cell-index ring expansion): each iteration covers every
+still-unconfirmed center's search box with equal-angle CELLS (geo.cells —
+the H3 ``grid_disk`` analogue).  The per-center cell ranges are computed
+once in numpy (_cover_extents) and expanded into (q_id, cell_id) rows on
+the cluster (_cover_df_jvm, sequence/explode), so the cover never
+materializes on the driver.  Pixels get the same cell id as a JVM column
+expression, and candidates come from an equi-join on cell_id — never a
+nested-loop range join, so cost is O(pixels_in_rings), not O(pixels x
+centers) per iteration.
+
+The join's build side comes from exact row counts, never from the
+planner's size estimates (which put a 6.25M-row cover at 6.4 MB and a
+51,200-row pixel_geometry table at 10 TB, and so broadcast the cover):
+the cover has exactly sum(nx * ny) rows over its extents, and the pixels
+are counted once per call.  Per iteration (_pick_build_side):
+- ``pixels``: fewer pixels than cover rows and within BROADCAST_ROW_BUDGET —
+  the pixel table is broadcast and the radius-matched cover streams
+  through the hash join;
+- ``cover``: otherwise the cover is broadcast, at the radius-matched
+  resolution or up to MAX_COARSEN_LEVELS coarser, the finest that fits
+  the budget (coarser cells only add slop that the exact region clip
+  removes);
+- ``none``: neither side fits (10^6 centers over 2.88M pixels) — a
+  shuffled hash join at the radius-matched resolution, built on the
+  smaller side.
 Candidates are then clipped to the exact search region and ranked with ONE
 per-query top-k aggregate (sorted-array slice, map-side partials — no
 candidate-set window shuffles); a query is CONFIRMED (and leaves the
 loop) when its k-th distance is inside the verified radius — the distance
 to the nearest boundary of the region actually searched (the standard
 ring-expansion termination rule).  Unconfirmed queries double their radius.
+Each iteration logs its decisions as one DEBUG record on this module's
+logger (attribute ``knn``: radius_deg, resolution, pending, cover_rows,
+pixel_rows, build_side, confirmed).
 
 Search-region geometry per CRS:
 - EPSG:6933 (CEA): x is LINEAR in the given lon (the projection plane is a
@@ -49,6 +62,9 @@ Search-region geometry per CRS:
 
 from __future__ import annotations
 
+import logging
+import warnings
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -56,22 +72,21 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..geo import cells as _cells
 from ..geo import ellipsoid as _ell
+from ..session import free_local_checkpoint, pandas_to_spark_blocks
 
-# per-iteration broadcast budget: (q_id, cell_id) rows shipped to executors.
-# ~24 B/row -> 1M rows ~ 24 MB, well under Spark's broadcast comfort zone;
-# the resolution auto-coarsens (bigger cells, same candidates after the
-# exact region filter) until the cover fits.
-COVER_ROW_BUDGET = 1_000_000
+_log = logging.getLogger(__name__)
 
-# how many levels below the radius-matched resolution the broadcast path may
-# coarsen before the candidate slop (cells grow 2x per axis per level while
-# the exact region stays fixed) outweighs the broadcast saving.  Past this,
-# knn_pixels switches to the SHUFFLE cover path: the cover is built on the
-# cluster at the radius-matched resolution (JVM sequence/explode — never
-# collected to the driver) and equi-joined on cell_id without a broadcast.
-# Found the hard way: at 10^6 pending centers the per-center cover floors at
-# ~4 cells, the budget loop walked res to 0, and the "hash join" became a
-# single-key cartesian (n_pixels x n_centers rows behind one cell_id).
+# rows either join side may have to be broadcast (a hash relation built on
+# the driver and shipped to every executor): ~24 B/row -> 1M rows ~ 24 MB,
+# well under Spark's broadcast comfort zone.
+BROADCAST_ROW_BUDGET = 1_000_000
+
+# how many levels below the radius-matched resolution the cover may coarsen
+# to fit the broadcast budget before the candidate slop (cells grow 2x per
+# axis per level while the exact region stays fixed) outweighs the
+# broadcast saving; past this the join is shuffled.  Unbounded coarsening
+# degenerates: at 10^6 centers the per-center cover floors at ~4 cells, the
+# resolution walks to 0 and the "hash join" becomes a single-key cartesian.
 MAX_COARSEN_LEVELS = 3
 
 
@@ -99,17 +114,22 @@ def _proj_cols(lon_col, lat_col, epsg: int):
     raise ValueError(f"unsupported EPSG:{epsg}")
 
 
+def _pack_cell_col(res: int, ix, iy) -> F.Column:
+    """geo.cells.cell_id as a JVM column expression: (res<<58)|(ix<<29)|iy."""
+    return (F.lit(res).cast("long") * F.lit(1 << 58).cast("long")
+            + F.shiftleft(ix, 29) + iy)
+
+
 def _cell_id_col(lon_col, lat_col, res: int) -> F.Column:
     """geo.cells.cell_of as a JVM column expression — identical packing
-    ((res<<58)|(ix<<29)|iy, lon wrapped, lat clamped) so driver-side covers
-    and executor-side assignments meet on an equi-join key."""
+    (lon wrapped, lat clamped) so pixel cells and cover cells meet on an
+    equi-join key."""
     n = F.lit(1 << res)
     ix = F.floor((lon_col + F.lit(180.0)) / F.lit(360.0) * n).cast("long")
     iy = F.floor((lat_col + F.lit(90.0)) / F.lit(180.0) * n).cast("long")
     ix = ((ix % n) + n) % n
     iy = F.greatest(F.least(iy, n - F.lit(1)), F.lit(0))
-    return (F.lit(res).cast("long") * F.lit(1 << 58).cast("long")
-            + F.shiftleft(ix, 29) + iy)
+    return _pack_cell_col(res, ix, iy)
 
 
 def _matched_resolution(radius_deg: float) -> int:
@@ -119,51 +139,23 @@ def _matched_resolution(radius_deg: float) -> int:
                        0, _cells.MAX_RES))
 
 
-def _per_center_cells(radius_deg: float, res: int) -> float:
-    """Estimated (q_id, cell) cover rows per center at this resolution."""
-    n = 1 << res
-    return ((2.0 * radius_deg * n / 360.0 + 2.0)
-            * (2.0 * radius_deg * n / 180.0 + 2.0))
-
-
-def _ring_resolution(radius_deg: float, n_pending: int) -> int:
-    """Cell resolution for the BROADCAST cover: the radius-matched
-    resolution, coarsened until the whole (q_id, cell) cover fits the
-    broadcast row budget — but never more than MAX_COARSEN_LEVELS below
-    matched.  Candidate count is set by pixel density inside the exact
-    search region, not by cell size — moderate coarsening only adds slop
-    that the exact region filter removes, while unbounded coarsening
-    degenerates to a few global cells and a single-key cartesian (the
-    10^6-center failure).  When even the clamped resolution cannot meet
-    the budget, knn_pixels uses the shuffle cover path instead."""
-    res = _matched_resolution(radius_deg)
-    floor_res = max(res - MAX_COARSEN_LEVELS, 0)
-    while res > floor_res:
-        if n_pending * _per_center_cells(radius_deg, res) <= COVER_ROW_BUDGET:
-            break
-        res -= 1
-    return res
-
-
-def _cover_rows(pending: pd.DataFrame, radius_deg: float, res: int) -> pd.DataFrame:
-    """(q_id, cell_id, c_lat, c_lon) cover of every pending center's search
-    box (the ring union up to this radius), FULLY VECTORIZED over centers —
-    no per-center Python loop, so 10^6 pending centers cost one ragged
-    numpy expansion instead of minutes of driver time.  Same semantics as
-    geo.cells.cover_bbox per center: lon cell indices wrap through the
-    modulus (antimeridian boxes cover cells on both sides), lat indices
-    clamp to the grid."""
+def _cover_extents(pending: pd.DataFrame, radius_deg: float, res: int):
+    """Per-center cell index ranges of the search box at this resolution:
+    int64 arrays (x0, nx, y0, ny); the center's ring cover is the nx x ny
+    cells from (x0, y0), ix wrapped mod 2^res.  Same semantics as
+    geo.cells.cover_bbox per center: lon indices wrap (antimeridian boxes
+    cover cells on both sides), a box spanning the full lon circle covers
+    each physical cell exactly once, lat indices clamp to the grid.
+    Vectorized over centers; the cover has exactly sum(nx * ny) rows."""
     n = 1 << res
     clon = pending["c_lon"].to_numpy(dtype=np.float64)
     clat = pending["c_lat"].to_numpy(dtype=np.float64)
-    qid = pending["q_id"].to_numpy(dtype=np.int64)
     x0 = np.floor((clon - radius_deg + 180.0) / 360.0 * n).astype(np.int64)
     x1 = np.ceil((clon + radius_deg + 180.0) / 360.0 * n).astype(np.int64) - 1
-    x1 = np.maximum(x1, x0)
-    nx = x1 - x0 + 1
-    full = nx >= n                    # full lon circle: cover each physical
-    x0[full] = 0                      # cell exactly once (cover_bbox's
-    nx[full] = n                      # np.unique equivalent)
+    nx = np.maximum(x1, x0) - x0 + 1
+    full = nx >= n
+    x0 = np.where(full, 0, x0 % n)
+    nx = np.where(full, n, nx)
     lat_lo = np.maximum(clat - radius_deg, -90.0)
     lat_hi = np.minimum(clat + radius_deg, 90.0)
     y0 = np.clip(np.floor((lat_lo + 90.0) / 180.0 * n).astype(np.int64),
@@ -171,16 +163,31 @@ def _cover_rows(pending: pd.DataFrame, radius_deg: float, res: int) -> pd.DataFr
     y1 = np.clip(np.ceil((lat_hi + 90.0) / 180.0 * n).astype(np.int64) - 1,
                  0, n - 1)
     ny = np.maximum(y1, y0) - y0 + 1
-    cnt = nx * ny
-    # ragged expansion: one row per (center, cell) without a Python loop
-    rep = np.repeat(np.arange(len(qid)), cnt)
-    off = np.concatenate([[0], np.cumsum(cnt)[:-1]])
-    loc = np.arange(int(cnt.sum()), dtype=np.int64) - np.repeat(off, cnt)
-    ix = (x0[rep] + loc // ny[rep]) % n
-    iy = y0[rep] + loc % ny[rep]
-    return pd.DataFrame({"q_id": qid[rep],
-                         "cell_id": _cells.cell_id(res, ix, iy),
-                         "c_lat": clat[rep], "c_lon": clon[rep]})
+    return x0, nx, y0, ny
+
+
+def _cover_row_count(pending: pd.DataFrame, radius_deg: float,
+                     res: int) -> int:
+    """Exact (q_id, cell_id) row count of the ring cover at this
+    resolution — what _cover_df_jvm will generate, without building it."""
+    _, nx, _, ny = _cover_extents(pending, radius_deg, res)
+    return int((nx * ny).sum())
+
+
+def _pick_build_side(pending: pd.DataFrame, radius_deg: float,
+                     n_pix: int) -> tuple[int, int, str]:
+    """(resolution, cover rows, build side) of one iteration's candidate
+    join, from exact row counts (rules in the module docstring)."""
+    res = _matched_resolution(radius_deg)
+    n_cover = _cover_row_count(pending, radius_deg, res)
+    if n_pix < n_cover and n_pix <= BROADCAST_ROW_BUDGET:
+        return res, n_cover, "pixels"
+    for r in range(res, max(res - MAX_COARSEN_LEVELS, 0) - 1, -1):
+        rows = n_cover if r == res else _cover_row_count(pending,
+                                                         radius_deg, r)
+        if rows <= BROADCAST_ROW_BUDGET:
+            return r, rows, "cover"
+    return res, n_cover, "none"
 
 
 def _with_proj(df: DataFrame, lon: str, lat: str, x: str, y: str,
@@ -199,8 +206,7 @@ def _clip_and_dist(j: DataFrame, radius: float, wrap_lon: bool) -> DataFrame:
     """Exact search-region clip (the cell cover is a conservative
     superset; region geometry per CRS in the module docstring) + the
     projected squared distance from the PRE-COMPUTED projection columns
-    (_px/_py per pixel, _cx/_cy per center) — shared by both cover
-    paths."""
+    (_px/_py per pixel, _cx/_cy per center)."""
     if wrap_lon:
         dlon = F.abs(F.pmod(F.col("lon") - F.col("c_lon") + F.lit(540.0),
                             F.lit(360.0)) - F.lit(180.0))
@@ -214,97 +220,46 @@ def _clip_and_dist(j: DataFrame, radius: float, wrap_lon: bool) -> DataFrame:
              .drop("_px", "_py", "_cx", "_cy"))
 
 
-def _ring_candidates(spark: SparkSession, pixels: DataFrame,
-                     pending: pd.DataFrame, radius: float, res: int,
-                     epsg: int, wrap_lon: bool) -> DataFrame:
-    """One expansion iteration's candidate set: Broadcast HASH join of
-    pixels against the (q_id, cell_id) ring cover — never a nested-loop
-    range join — then the exact region clip and distance."""
-    # blocks before broadcasting: the broadcast build otherwise scans the
-    # pandas-backed plan (measured ~10x slower than a block scan)
-    from ..session import pandas_to_spark_blocks
-    cover = F.broadcast(_with_proj(
-        pandas_to_spark_blocks(spark, _cover_rows(pending, radius, res)),
-        "c_lon", "c_lat", "_cx", "_cy", epsg))
-    j = (_with_proj(pixels, "lon", "lat", "_px", "_py", epsg)
-         .withColumn("cell_id",
-                     _cell_id_col(F.col("lon"), F.col("lat"), res))
-         .join(cover, "cell_id"))
-    return _clip_and_dist(j, radius, wrap_lon)
-
-
 def _cover_df_jvm(spark: SparkSession, pending: pd.DataFrame,
-                  radius: float, res: int, epsg: int) -> DataFrame:
-    """The (q_id, cell_id, c_lat, c_lon) ring cover as a DISTRIBUTED
-    DataFrame: per-center cell ranges with JVM arithmetic, expanded with
-    sequence/explode on the executors — the cover never materializes on
-    the driver, so center counts where even the radius-matched cover
-    exceeds the broadcast budget (10^6+) stay out of driver memory.
-    Mirrors _cover_rows' numpy arithmetic exactly (both are float64, same
-    floor/ceil/pmod formulas), property-tested for set equality in
-    tests/test_knn.py."""
+                  radius: float, res: int,
+                  epsg: int) -> tuple[DataFrame, DataFrame]:
+    """The (q_id, cell_id, c_lat, c_lon, _cx, _cy) ring cover as a
+    DISTRIBUTED DataFrame: the per-center extents (_cover_extents) travel
+    with the centers, and sequence/explode expands them into cells on the
+    executors — the cover never materializes on the driver.  Returns
+    (cover, blocks): ``blocks`` are the checkpointed centers the cover
+    reads, to be freed once the cover's consumer is materialized."""
     n = 1 << res
-    # materialize the centers as checkpointed blocks BEFORE the explode
-    # pipeline consumes them: scanning the pandas-backed plan inside the
-    # Generate stage measured ~10x slower than scanning materialized
-    # blocks (22s vs <1s for the 10^6-center cover at bench scale) — the
-    # python-sourced scan defeats whole-stage codegen for everything
-    # above it.  pandas_to_spark_blocks does the conversion through a
-    # native parquet roundtrip (another ~4x on the conversion itself).
-    from ..session import pandas_to_spark_blocks
-    c = _with_proj(pandas_to_spark_blocks(
-                       spark, pending[["q_id", "c_lat", "c_lon"]]),
-                   "c_lon", "c_lat", "_cx", "_cy", epsg)
-    x0 = F.floor((F.col("c_lon") - F.lit(radius) + F.lit(180.0))
-                 / F.lit(360.0) * F.lit(n)).cast("long")
-    x1 = F.ceil((F.col("c_lon") + F.lit(radius) + F.lit(180.0))
-                / F.lit(360.0) * F.lit(n)).cast("long") - F.lit(1)
-    x1 = F.greatest(x1, x0)
-    nx = x1 - x0 + F.lit(1)
-    full = nx >= F.lit(n)              # full lon circle: each physical cell
-    x0 = F.when(full, F.lit(0)).otherwise(x0)   # exactly once
-    nx = F.when(full, F.lit(n)).otherwise(nx)
-    lat_lo = F.greatest(F.col("c_lat") - F.lit(radius), F.lit(-90.0))
-    lat_hi = F.least(F.col("c_lat") + F.lit(radius), F.lit(90.0))
-    y0 = F.greatest(F.least(
-        F.floor((lat_lo + F.lit(90.0)) / F.lit(180.0) * F.lit(n))
-         .cast("long"), F.lit(n - 1)), F.lit(0))
-    y1 = F.greatest(F.least(
-        F.ceil((lat_hi + F.lit(90.0)) / F.lit(180.0) * F.lit(n))
-         .cast("long") - F.lit(1), F.lit(n - 1)), F.lit(0))
-    ny = F.greatest(y1, y0) - y0 + F.lit(1)
-    c = (c.withColumn("_x0", x0).withColumn("_nx", nx)
-          .withColumn("_y0", y0).withColumn("_ny", ny))
-    c = c.withColumn("_lx", F.explode(F.sequence(
-        F.lit(0).cast("long"), F.col("_nx") - F.lit(1))))
-    c = c.withColumn("_ly", F.explode(F.sequence(
-        F.lit(0).cast("long"), F.col("_ny") - F.lit(1))))
-    ix = F.pmod(F.col("_x0") + F.col("_lx"), F.lit(n))
-    iy = F.col("_y0") + F.col("_ly")
-    cell = (F.lit(res).cast("long") * F.lit(1 << 58).cast("long")
-            + F.shiftleft(ix, 29) + iy)
-    return c.select("q_id", cell.alias("cell_id"), "c_lat", "c_lon",
-                    "_cx", "_cy")
+    x0, nx, y0, ny = _cover_extents(pending, radius, res)
+    # checkpointed blocks, not a pandas-backed plan: a python-sourced scan
+    # under the Generate stage defeats whole-stage codegen for everything
+    # above it (measured ~10x slower for the 10^6-center cover)
+    blocks = pandas_to_spark_blocks(spark, pd.DataFrame({
+        "q_id": pending["q_id"].to_numpy(dtype=np.int64),
+        "c_lat": pending["c_lat"].to_numpy(dtype=np.float64),
+        "c_lon": pending["c_lon"].to_numpy(dtype=np.float64),
+        "_x0": x0, "_nx": nx, "_y0": y0, "_ny": ny}))
+    c = _with_proj(blocks, "c_lon", "c_lat", "_cx", "_cy", epsg)
+    zero = F.lit(0).cast("long")
+    c = c.withColumn("_lx", F.explode(F.sequence(zero, F.col("_nx") - 1)))
+    c = c.withColumn("_ly", F.explode(F.sequence(zero, F.col("_ny") - 1)))
+    cell = _pack_cell_col(res, F.pmod(F.col("_x0") + F.col("_lx"), F.lit(n)),
+                          F.col("_y0") + F.col("_ly"))
+    return (c.select("q_id", cell.alias("cell_id"), "c_lat", "c_lon",
+                     "_cx", "_cy"), blocks)
 
 
-def _ring_candidates_shuffle(spark: SparkSession, pixels: DataFrame,
-                             pending: pd.DataFrame, radius: float,
-                             res: int, epsg: int,
-                             wrap_lon: bool) -> DataFrame:
-    """Shuffle-cover variant for center counts beyond the broadcast
-    budget: the radius-matched cover is built on the cluster
-    (_cover_df_jvm) and equi-joined on cell_id as a plain shuffle join
-    (AQE picks the physical strategy and splits skewed cells).  Cost is
-    O(pixels_in_covers) candidate rows through one shuffle — linear in
-    centers and pixels, never the single-key cartesian the over-coarsened
-    broadcast path degenerated to at 10^6 centers.  (Broadcasting the
-    pixel side instead was measured at bench scale and lost: the ~300 MB
-    hash-relation build exceeded the exchange it saved.)"""
-    cover = _cover_df_jvm(spark, pending, radius, res, epsg)
-    pix2 = (_with_proj(pixels, "lon", "lat", "_px", "_py", epsg)
-            .withColumn("cell_id",
-                        _cell_id_col(F.col("lon"), F.col("lat"), res)))
-    return _clip_and_dist(pix2.join(cover, "cell_id"), radius, wrap_lon)
+def _candidate_join(pix: DataFrame, cover: DataFrame, build: str,
+                    n_pix: int, n_cover: int) -> DataFrame:
+    """Equi-join on cell_id with the build side pinned by hint, so the
+    planner's size estimates never pick it."""
+    if build == "pixels":
+        return cover.join(F.broadcast(pix), "cell_id")
+    if build == "cover":
+        return pix.join(F.broadcast(cover), "cell_id")
+    if n_pix <= n_cover:
+        return cover.join(pix.hint("shuffle_hash"), "cell_id")
+    return pix.join(cover.hint("shuffle_hash"), "cell_id")
 
 
 def _topk_struct_agg(j: DataFrame, k: int) -> DataFrame:
@@ -315,8 +270,8 @@ def _topk_struct_agg(j: DataFrame, k: int) -> DataFrame:
     paid TWO full shuffles + sorts of the raw candidate set (the windows
     repartition by (q_id, pid) and then q_id); here partial aggregation
     reduces map-side and only per-group arrays cross the exchange — and
-    when the candidate join keeps each q_id partition-local (the
-    broadcast-pixels cover path), the aggregate completes map-side
+    when the candidate join keeps each q_id partition-local (pixels
+    build side: the cover streams), the aggregate completes map-side
     entirely.  Per-group transient state is the group's candidate structs
     (16 B each); the sort-based aggregation fallback (>128 groups) keeps
     the input sort spillable, so a domain-radius group degrades to disk,
@@ -331,8 +286,7 @@ def _topk_struct_agg(j: DataFrame, k: int) -> DataFrame:
 def knn_pixels(spark: SparkSession, pixels: DataFrame, centers: pd.DataFrame,
                k: int, radius_deg: float | None = None,
                max_radius_deg: float = 360.0,
-               epsg: int | None = None,
-               _force_shuffle_cover: bool = False) -> DataFrame:
+               epsg: int | None = None) -> DataFrame:
     """pixels: (pix_idx, lat, lon).  centers: pandas (q_id, c_lat, c_lon).
     Returns (q_id, rank, pix_idx, dist2) — rank 1..k by equal-area-CRS
     distance, ties on pix_idx.  epsg defaults to the J2 pick from the
@@ -343,15 +297,16 @@ def knn_pixels(spark: SparkSession, pixels: DataFrame, centers: pd.DataFrame,
     emit a UserWarning listing the under-k q_ids, so callers joining the
     result back by q_id get a loud signal instead of silent row loss.
 
-    Scale bounds: the candidate join is distributed at any center count
-    (broadcast cover below COVER_ROW_BUDGET, cluster-built shuffle cover
-    past it — measured at 10^6 centers x 2.88M pixels), but the loop's
-    per-iteration bookkeeping (pending table, confirmation counts,
-    verified radii) is driver-side pandas/numpy, O(n_query) memory —
-    practical to ~10^7 centers.  Past that, split the centers into
-    batches and union the results: every query's k-NN set is independent
-    of every other query, so query-set batching is EXACT, not an
-    approximation."""
+    Scale bounds: the cover is built on the cluster at every center count
+    and the candidate join is an equi-join on cell_id whose build side is
+    the smaller side within BROADCAST_ROW_BUDGET, else a shuffled hash
+    join (measured at 10^6 centers x 2.88M pixels).  The loop's
+    per-iteration bookkeeping (pending table, cover extents, confirmation
+    counts, verified radii) is driver-side pandas/numpy, O(n_query)
+    memory — practical to ~10^7 centers.  Past that, split the centers
+    into batches and union the results: every query's k-NN set is
+    independent of every other query, so query-set batching is EXACT, not
+    an approximation."""
     if len(centers) == 0:
         raise ValueError("knn_pixels: empty centers table")
     if centers["q_id"].duplicated().any():
@@ -367,26 +322,21 @@ def knn_pixels(spark: SparkSession, pixels: DataFrame, centers: pd.DataFrame,
         epsg = _ell.pick_epsg(float(centers["c_lat"].min()),
                               float(centers["c_lat"].max()))
     wrap_lon = epsg != _ell.EPSG_GLOBAL
+    pix = _with_proj(pixels, "lon", "lat", "_px", "_py", epsg)
+    # one scan job: DataFrame.count() plans an aggregate that AQE runs as
+    # two jobs (0.2 s vs 0.08 s on 2.88M pixel_geometry rows, 4 cores)
+    n_pix = pixels._jdf.queryExecution().toRdd().count()
     pending = centers[["q_id", "c_lat", "c_lon"]].copy()
     radius = radius_deg or 2.0
     chunks = []
     while len(pending):
-        res = _ring_resolution(radius, len(pending))
-        if not _force_shuffle_cover and (
-                len(pending) * _per_center_cells(radius, res)
-                <= COVER_ROW_BUDGET):
-            j = _ring_candidates(spark, pixels, pending, radius, res,
-                                 epsg, wrap_lon)
-        else:
-            # even MAX_COARSEN_LEVELS of coarsening can't fit the cover in
-            # the broadcast budget (10^6+ pending centers): build the cover
-            # on the cluster at the radius-MATCHED resolution and shuffle
-            # — coarser cells would only multiply candidate slop here.
-            # (_force_shuffle_cover pins this path at any center count —
-            # oracle replays — without mutating the module budget.)
-            j = _ring_candidates_shuffle(spark, pixels, pending, radius,
-                                         _matched_resolution(radius),
-                                         epsg, wrap_lon)
+        res, n_cover, build = _pick_build_side(pending, radius, n_pix)
+        cover, blocks = _cover_df_jvm(spark, pending, radius, res, epsg)
+        pix_cells = pix.withColumn(
+            "cell_id", _cell_id_col(F.col("lon"), F.col("lat"), res))
+        j = _clip_and_dist(
+            _candidate_join(pix_cells, cover, build, n_pix, n_cover),
+            radius, wrap_lon)
         # ONE aggregate produces the ranked top-k array per query
         # (ascending (dist2, pix_idx) — row_number's exact order); the
         # confirmation counts AND the accepted rows are cheap projections
@@ -395,6 +345,7 @@ def knn_pixels(spark: SparkSession, pixels: DataFrame, centers: pd.DataFrame,
         # full candidate shuffles + sorts in the two-phase window, a
         # separate count aggregate, and a second checkpoint).
         top = _topk_struct_agg(j, k).localCheckpoint(eager=True)
+        free_local_checkpoint(blocks)        # read by nothing past top
         # confirmation: the k-th distance must be inside the verified radius
         # (distance to the searched region's boundary), else a closer pixel
         # could lie outside.  <= n_pending rows — loop control, not data.
@@ -421,7 +372,6 @@ def knn_pixels(spark: SparkSession, pixels: DataFrame, centers: pd.DataFrame,
             short = sorted(pq[got.reindex(pq).fillna(0).to_numpy()
                               < k].tolist())
             if short:
-                import warnings
                 warnings.warn(
                     f"knn_pixels: {len(short)} quer{'y' if len(short) == 1 else 'ies'} "
                     f"returned fewer than k={k} rows at max_radius_deg="
@@ -451,6 +401,11 @@ def knn_pixels(spark: SparkSession, pixels: DataFrame, centers: pd.DataFrame,
                            (F.col("_p") + 1).cast("int").alias("rank"),
                            F.col("_s")["pix_idx"].alias("pix_idx"),
                            F.col("_s")["dist2"].alias("dist2")))
+        rec = {"radius_deg": radius, "resolution": res,
+               "pending": len(pending), "cover_rows": n_cover,
+               "pixel_rows": n_pix, "build_side": build,
+               "confirmed": len(done)}
+        _log.debug("knn_pixels iteration %s", rec, extra={"knn": rec})
         pending = pending[~pending["q_id"].astype(int).isin(done)]
         radius *= 2.0
     out = chunks[0]

@@ -34,8 +34,10 @@ def pandas_to_spark_blocks(spark, pdf):
     ``createDataFrame(pdf).localCheckpoint`` at 10^6 rows (2.4-3.7 s →
     0.6-1.5 s): the python-sourced Arrow scan is slow even for a single
     pass, while the parquet write+scan is all native.  Values are exact
-    (int64/float64/bool roundtrip losslessly).  Falls back to plain
-    createDataFrame+checkpoint if pyarrow is unavailable."""
+    (int64/float64/bool roundtrip losslessly).  The scratch goes under
+    ``spark.local.dir`` when set, else the system temp dir (``TMPDIR``).
+    Falls back to plain createDataFrame+checkpoint if pyarrow is
+    unavailable."""
     import shutil
     import tempfile
     try:
@@ -46,8 +48,11 @@ def pandas_to_spark_blocks(spark, pdf):
         return spark.createDataFrame(pdf).localCheckpoint(eager=True)
     if len(pdf) == 0:
         return spark.createDataFrame(pdf).localCheckpoint(eager=True)
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    d = tempfile.mkdtemp(prefix="xagg-pdf-", dir=base)
+    base = spark.sparkContext.getConf().get("spark.local.dir")
+    if base:
+        base = base.split(",")[0]
+        os.makedirs(base, exist_ok=True)
+    d = tempfile.mkdtemp(prefix="xagg-pdf-", dir=base or None)
     try:
         n_chunks = min(max(spark.sparkContext.defaultParallelism, 1),
                        len(pdf))
@@ -72,13 +77,11 @@ def get_spark(app: str = "xagg_spark", master: str | None = None,
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     # shuffle/spill scratch belongs on the fastest local storage (guide §1.3
-    # — local disk bandwidth can be the tighter shuffle limit; on clusters
-    # point this at node-local NVMe via XAGG_SPARK_LOCAL_DIR).  Shuffle
-    # scratch is transient and never survives the job, so a RAM-backed tmpfs
-    # is ideal where present; fall back to the JVM default otherwise.
+    # — local disk bandwidth can be the tighter shuffle limit): point it at
+    # node-local NVMe, or at a RAM-backed tmpfs such as /dev/shm, via
+    # XAGG_SPARK_LOCAL_DIR.  Unset, Spark's own default applies — tmpfs is
+    # never chosen unasked, since spill there competes with the heap for RAM.
     local_dir = os.environ.get("XAGG_SPARK_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm"):
-        local_dir = "/dev/shm/spark-scratch"
     b = (SparkSession.builder.appName(app).master(master)
          .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
          .config("spark.sql.adaptive.enabled", "true")
