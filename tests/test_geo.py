@@ -8,7 +8,8 @@ import numpy as np
 import pytest
 
 from xagg_spark.geo import (canonicalize_axis, cea_band_area, clip_area,
-                            cover_bbox, cover_polygon, crosses_antimeridian,
+                            cover_bbox, cover_polygon_classified,
+                            crosses_antimeridian,
                             forward, pick_epsg, rect_rect_overlap_area_cea,
                             synth_bounds, wrap_lon)
 
@@ -157,12 +158,15 @@ def test_antimeridian_flag():
 def test_cover_bbox_and_polygon():
     cells = cover_bbox(-1.0, -1.0, 1.0, 1.0, res=7)
     assert len(cells) >= 1
-    # polygon cover subset of bbox cover
-    lons = np.array([-1.0, 1.0, 0.0])
-    lats = np.array([-1.0, -1.0, 1.0])
-    pc = cover_polygon(lons, lats, res=7)
-    assert set(pc.tolist()) <= set(cells.tolist())
-    assert len(pc) >= 1
+    # polygon cover subset of the bbox cover grown by the cover's one-cell
+    # dilation ring
+    cw, ch = 360.0 / 2 ** 7, 180.0 / 2 ** 7
+    grown = cover_bbox(-1.0 - cw, -1.0 - ch, 1.0 + cw, 1.0 + ch, res=7)
+    tri = np.array([[-1.0, -1.0], [1.0, -1.0], [0.0, 1.0]])
+    pc, full = cover_polygon_classified([tri], res=7)
+    assert set(pc.tolist()) <= set(grown.tolist())
+    assert set(cells.tolist()) <= set(pc.tolist())
+    assert len(pc) >= 1 and not full.any()
 
 
 def test_convex_pieces_nonconvex_quad():

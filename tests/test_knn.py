@@ -200,6 +200,33 @@ def test_knn_logs_one_decision_record_per_iteration(spark, caplog):
                                                for i in range(len(recs))]
 
 
+def test_knn_frees_top_of_rounds_that_confirm_nothing(spark, caplog):
+    """A round that confirms no query checkpoints its top-k arrays and
+    nothing ever reads them, so the call must free them.  Afterwards only
+    the checkpoints behind the returned view stay persisted: each
+    confirming round's top-k arrays, plus its accepted-id table when it
+    confirmed only part of its pending queries."""
+    import logging
+
+    caplog.set_level(logging.DEBUG, logger="xagg_spark.operators.knn")
+    grid, pixels, centers = _dense_case(spark)
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return {int(i) for i in jsc.getPersistentRDDs().keySet()}
+
+    before = persisted()
+    out = knn_pixels(spark, pixels, centers, k=4, radius_deg=0.25)
+    new = persisted() - before
+    recs = [r.knn for r in caplog.records if hasattr(r, "knn")]
+    assert recs[0]["confirmed"] == 0
+    assert len(new) == sum(1 + (r["confirmed"] < r["pending"])
+                           for r in recs if r["confirmed"])
+    got = sorted((int(a), int(b), int(c)) for a, b, c in
+                 out.select("q_id", "rank", "pix_idx").collect())
+    assert got == _brute(grid, centers, 4, _ell.EPSG_GLOBAL)
+
+
 def test_knn_cea_near_antimeridian_keeps_cut_plane_semantics(spark):
     """CEA (EPSG:6933) is a cylinder CUT at +-180: x is linear in the given
     lon, so two pixels across the cut are genuinely far apart in-plane.

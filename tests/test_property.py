@@ -12,7 +12,7 @@ from xagg_spark.codecs import decode_tile, encode_tile, psnr
 from xagg_spark.geo import (cea_band_area, clip_area, forward,
                             rect_rect_overlap_area_cea, synth_bounds,
                             wrap_lon)
-from xagg_spark.geo.cells import cell_of, cover_polygon
+from xagg_spark.geo.cells import cell_of, cover_polygon_classified
 
 lat_st = st.floats(-89.0, 89.0)
 lon_st = st.floats(-179.0, 179.0)
@@ -72,10 +72,10 @@ def test_cover_contains_vertex_cells(pts, res):
     area2 = abs(np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y))
     if area2 < 1e-6:
         return
-    # the engine always uses the 1-ring-dilated cover (center-cell pixel
-    # assignment); a vertex exactly on a cell boundary floors into the
-    # neighbor cell, which the dilation covers
-    cover = cover_polygon(x, y, res, dilate=True)
+    # the engine's cover is 1-ring dilated (center-cell pixel assignment);
+    # a vertex exactly on a cell boundary floors into the neighbor cell,
+    # which the dilation covers
+    cover, _ = cover_polygon_classified([ring], res)
     vcells = cell_of(x, y, res)
     assert set(vcells.tolist()) <= set(cover.tolist())
 

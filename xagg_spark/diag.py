@@ -14,16 +14,6 @@ from __future__ import annotations
 import numpy as np
 import pyspark.sql.functions as F
 
-from .grid import AxesGrid, GridSpec
-
-
-def _grid_axes(grid):
-    if isinstance(grid, GridSpec):
-        ag = AxesGrid(grid.lat_axis(), grid.lon_axis()).with_bounds()
-    else:
-        ag = grid.with_bounds()
-    return ag
-
 
 def _select_poly_idxs(wm, poly_id) -> list:
     """Reference diag_fig selection semantics (xagg/diag.py:55-63):
@@ -65,7 +55,7 @@ def diag_fig(wm, poly_id=0, fn: str | None = None,
              .agg(F.max("rel_area").alias("rel_area")).toPandas())
     if len(pdf) == 0:
         raise ValueError(f"polygon {poly_id} has no overlaps")
-    ag = _grid_axes(wm.grid)
+    ag = wm.grid.with_bounds()
     nlon = ag.nlon
     iy = (pdf["pix_idx"].to_numpy() // nlon).astype(int)
     ix = (pdf["pix_idx"].to_numpy() % nlon).astype(int)

@@ -1,4 +1,5 @@
-"""Hierarchical lon/lat cell index (H3/S2 stand-in), pure numpy.
+"""Hierarchical lon/lat cell index (H3/S2 stand-in): numpy kernels and
+their Spark-column twins.
 
 Neither h3 nor s2 bindings exist in this environment, so the engine uses its
 own deterministic equal-angle cell grid: at resolution ``r`` the world is a
@@ -10,11 +11,19 @@ J1a): polygons are covered by a set of cells (broadcast side), pixels map to
 the cells their bbox touches (fact side), and the overlap join is a plain
 equi-join on cell_id followed by exact refinement.  Cell ids are derived
 purely from coordinates -> deterministic under any parallelism.
+
+The cover is built here in numpy on the driver; the pixel side gets its cell
+id on the JVM from ``cell_id_col`` / ``pack_cell_col``, the column twins of
+``cell_of`` / ``cell_id`` (same arithmetic, so both sides meet on one key).
 """
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import Column
+from pyspark.sql import functions as sf
+
+from .clip import crossing_parity, ring_edges
 
 MAX_RES = 24
 
@@ -36,6 +45,25 @@ def cell_of(lon, lat, res: int):
     ix = np.clip(ix % n, 0, n - 1)
     iy = np.clip(iy, 0, n - 1)
     return cell_id(res, ix, iy)
+
+
+def pack_cell_col(res: int, ix: Column, iy: Column) -> Column:
+    """``cell_id`` as a Spark column expression: (res<<58)|(ix<<29)|iy over
+    long index columns already inside [0, 2^res)."""
+    return (sf.lit(res).cast("long") * sf.lit(1 << 58).cast("long")
+            + sf.shiftleft(ix, 29) + iy)
+
+
+def cell_id_col(lon: Column, lat: Column, res: int) -> Column:
+    """``cell_of`` as a Spark column expression (JVM codegen, no UDF): the
+    same floor arithmetic, lon wrapped and lat clamped, so the id equals
+    ``cell_of`` exactly for every point."""
+    n = sf.lit(1 << res)
+    ix = sf.floor((lon + sf.lit(180.0)) / sf.lit(360.0) * n).cast("long")
+    iy = sf.floor((lat + sf.lit(90.0)) / sf.lit(180.0) * n).cast("long")
+    ix = ((ix % n) + n) % n
+    iy = sf.greatest(sf.least(iy, n - sf.lit(1)), sf.lit(0))
+    return pack_cell_col(res, ix, iy)
 
 
 def cell_range(lo, hi, res: int, is_lon: bool):
@@ -72,76 +100,6 @@ def pick_resolution(pixel_deg: float, target_pixels_per_cell: float = 4.0) -> in
     cell_deg = pixel_deg * np.sqrt(target_pixels_per_cell)
     res = int(np.floor(np.log2(360.0 / cell_deg)))
     return int(np.clip(res, 0, MAX_RES))
-
-
-def cover_polygon(lons: np.ndarray, lats: np.ndarray, res: int,
-                  dilate: bool = False, pads=None) -> np.ndarray:
-    """Cell cover of a polygon ring, fully vectorized (no per-cell Python):
-
-    cover = { cells whose CENTER is inside the polygon  (interior, PIP on
-              the whole center grid at once) }
-          ∪ { cells any polygon EDGE passes through     (boundary, per-edge
-              conservative rasterization — walk the edge's x-columns and
-              mark the y-rows its segment spans in each column) }
-
-    Slightly conservative on the boundary (may include a touching neighbor
-    cell) — harmless: refine computes exact areas and drops empties.  Cost
-    is O(interior cells) numpy + O(perimeter cells) per edge, which keeps
-    domain-scale polygons (10^5+ cells) in milliseconds instead of minutes.
-    """
-    n = 1 << res
-    cw = 360.0 / n   # cell width (lon)
-    ch = 180.0 / n   # cell height (lat)
-    maxpad = float(np.max(pads)) if pads is not None and len(pads) else 0.0
-    lon0, lon1 = float(np.min(lons)) - maxpad, float(np.max(lons)) + maxpad
-    lat0, lat1 = float(np.min(lats)) - maxpad, float(np.max(lats)) + maxpad
-    x0, x1 = cell_range(lon0, lon1, res, True)
-    y0, y1 = cell_range(lat0, lat1, res, False)
-    nx, ny = x1 - x0 + 1, y1 - y0 + 1
-
-    # interior: point-in-polygon for every cell center (vectorized)
-    cx = -180.0 + (np.arange(x0, x1 + 1) + 0.5) * cw
-    cy = -90.0 + (np.arange(y0, y1 + 1) + 0.5) * ch
-    GX, GY = np.meshgrid(cx, cy, indexing="ij")      # (nx, ny)
-    ex0, ey0 = lons, lats
-    ex1, ey1 = np.roll(lons, -1), np.roll(lats, -1)
-    inside = np.zeros((nx, ny), dtype=bool)
-    P = GX.ravel()[:, None], GY.ravel()[:, None]
-    px, py = P
-    crossing = np.zeros(px.shape[0], dtype=np.int64)
-    CH = max(1024, (1 << 23) // max(len(lons), 1))
-    for s in range(0, px.shape[0], CH):
-        e = min(s + CH, px.shape[0])
-        ya, yb = ey0[None, :], ey1[None, :]
-        xa, xb = ex0[None, :], ex1[None, :]
-        cy_ = py[s:e]
-        cx_ = px[s:e]
-        cross = (ya > cy_) != (yb > cy_)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xi = xa + (cy_ - ya) * (xb - xa) / (yb - ya)
-        crossing[s:e] = (cross & (xi > cx_)).sum(axis=1)
-    inside = (crossing % 2).astype(bool).reshape(nx, ny)
-
-    mark = inside.copy()
-
-    mark |= _rasterize_edges(lons, lats, pads, res, x0, x1, y0, y1)
-
-    if dilate:
-        # 1-ring dilation on the boolean grid (pad, then 8-neighbor OR):
-        # guarantees a pixel assigned to its CENTER cell is never missed
-        # when cell size >= pixel size (pixel pokes <= half a cell out)
-        d = _dilate1(mark)
-        kx, ky = np.nonzero(d)
-        kx, ky = kx - 1 + x0, ky - 1 + y0
-        ok = (ky >= 0) & (ky < n)
-        kx, ky = kx[ok] % n, ky[ok]
-        if len(kx) == 0:
-            return np.zeros(0, dtype=np.int64)
-        return np.unique(cell_id(res, kx, ky))
-    kx, ky = np.nonzero(mark)
-    if len(kx) == 0:
-        return np.zeros(0, dtype=np.int64)
-    return np.unique(cell_id(res, (kx + x0) % n, ky + y0))
 
 
 def _dilate1(mark: np.ndarray) -> np.ndarray:
@@ -200,28 +158,20 @@ def cover_polygon_classified(rings, res: int, pads_list=None):
     y0, y1 = cell_range(lat0, lat1, res, False)
     nx, ny = x1 - x0 + 1, y1 - y0 + 1
 
-    # concatenated edge list over every ring (rolls stay ring-local)
-    ex0 = all_lon
-    ey0 = all_lat
-    ex1 = np.concatenate([np.roll(r[:, 0], -1) for r in rings])
-    ey1 = np.concatenate([np.roll(r[:, 1], -1) for r in rings])
-
+    # even-odd parity of every cell center against the union of all rings'
+    # edges, chunked so one chunk's (points x edges) temporaries stay at
+    # ~2^23 elements
+    edges = ring_edges(rings)
     cx = -180.0 + (np.arange(x0, x1 + 1) + 0.5) * cw
     cy = -90.0 + (np.arange(y0, y1 + 1) + 0.5) * ch
     GX, GY = np.meshgrid(cx, cy, indexing="ij")
-    px = GX.ravel()[:, None]
-    py = GY.ravel()[:, None]
-    crossing = np.zeros(px.shape[0], dtype=np.int64)
-    CHK = max(1024, (1 << 23) // max(len(ex0), 1))
-    for s in range(0, px.shape[0], CHK):
-        e = min(s + CHK, px.shape[0])
-        ya, yb = ey0[None, :], ey1[None, :]
-        xa, xb = ex0[None, :], ex1[None, :]
-        cross = (ya > py[s:e]) != (yb > py[s:e])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xi = xa + (py[s:e] - ya) * (xb - xa) / (yb - ya)
-        crossing[s:e] = (cross & (xi > px[s:e])).sum(axis=1)
-    inside = (crossing % 2).astype(bool).reshape(nx, ny)
+    px, py = GX.ravel(), GY.ravel()
+    inside = np.zeros(len(px), dtype=bool)
+    CHK = max(1024, (1 << 23) // max(len(edges), 1))
+    for s in range(0, len(px), CHK):
+        inside[s:s + CHK] = crossing_parity(px[s:s + CHK], py[s:s + CHK],
+                                            edges)
+    inside = inside.reshape(nx, ny)
 
     edge = np.zeros((nx, ny), dtype=bool)
     for r, p in zip(rings, pads_list):

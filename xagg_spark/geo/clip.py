@@ -12,6 +12,10 @@ lat/lon-aligned pixel maps to an exact axis-aligned rectangle, so the clip
 window is exactly convex and results are bit-comparable with GEOS up to
 floating-point summation order.  In the polar LAEA CRSes the projected pixel
 is a near-convex quad for any realistic pixel size; the same routine applies.
+
+The module also holds the engine's one even-odd point-in-polygon kernel
+(``ring_edges`` + ``crossing_parity``), shared by the cell cover, the refine
+UDF's fully-inside test and the ring hole classification.
 """
 
 from __future__ import annotations
@@ -24,6 +28,29 @@ def shoelace_area(xs: np.ndarray, ys: np.ndarray) -> float:
     if len(xs) < 3:
         return 0.0
     return float(abs(np.sum(xs * np.roll(ys, -1) - np.roll(xs, -1) * ys)) * 0.5)
+
+
+def ring_edges(rings) -> np.ndarray:
+    """(E, 4) edge table (xa, ya, xb, yb) over every ring's closed edge
+    cycle; rings are (N, 2) vertex arrays, concatenated in order."""
+    return np.concatenate([np.concatenate([r, np.roll(r, -1, axis=0)], axis=1)
+                           for r in rings], axis=0)
+
+
+def crossing_parity(px: np.ndarray, py: np.ndarray,
+                    edges: np.ndarray) -> np.ndarray:
+    """Even-odd (crossing-number) inside test of the points (px, py) against
+    an (E, 4) ``ring_edges`` table: a point is inside iff a ray to +x
+    crosses an odd number of edges, so points inside a hole ring come out
+    outside.  One call works on one chunk: it allocates (len(px), E)
+    temporaries, and callers chunk the points to bound them."""
+    px, py = px[:, None], py[:, None]
+    xa, ya = edges[None, :, 0], edges[None, :, 1]
+    xb, yb = edges[None, :, 2], edges[None, :, 3]
+    cross = (ya > py) != (yb > py)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xi = xa + (py - ya) * (xb - xa) / (yb - ya)
+    return ((cross & (xi > px)).sum(axis=1) % 2).astype(bool)
 
 
 def _ensure_ccw(pts: np.ndarray) -> np.ndarray:

@@ -1,4 +1,5 @@
-"""Equal-area map projections on the WGS84 ellipsoid, pure numpy.
+"""Equal-area map projections on the WGS84 ellipsoid: numpy kernels and
+their Spark-column twins.
 
 The reference engine (ks905383/xagg) reprojects both pixel rectangles and
 polygons to an EASE-Grid 2.0 CRS before computing intersection areas
@@ -9,14 +10,19 @@ equal-area, standard parallel 30N) (/root/reference/xagg/core.py:475-486).
 
 This module implements the forward transforms from the published Snyder
 formulas ("Map Projections: A Working Manual", USGS PP 1395, eq. 3-12,
-10-15..18, 24-21..26) so the engine needs no pyproj.  All functions are
-vectorized over numpy arrays and are used both on the driver (polygon prep)
-and inside Arrow-batched pandas UDFs (refinement clip).
+10-15..18, 24-21..26) so the engine needs no pyproj.  The numpy functions
+are vectorized over arrays and are used both on the driver (polygon prep)
+and inside Arrow-batched pandas UDFs (refinement clip).  ``q_auth_col`` and
+``forward_cols`` are the same formulas as Spark column expressions (JVM
+whole-stage codegen, no UDF): pixel areas and kNN distances are computed
+from them on the executors.
 """
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import Column
+from pyspark.sql import functions as sf
 
 # WGS84 ellipsoid
 A = 6378137.0
@@ -48,6 +54,16 @@ def q_auth(lat_rad):
 QP = float(q_auth(np.pi / 2.0))  # q at the pole
 
 
+def q_auth_col(lat_rad: Column) -> Column:
+    """``q_auth`` as a Spark column expression over a radians column."""
+    e = float(E)
+    s = sf.sin(lat_rad)
+    return sf.lit(1.0 - E2) * (
+        s / (sf.lit(1.0) - sf.lit(E2) * s * s)
+        - sf.lit(1.0 / (2.0 * e))
+        * sf.log((sf.lit(1.0) - sf.lit(e) * s) / (sf.lit(1.0) + sf.lit(e) * s)))
+
+
 def pick_epsg(lat_min: float, lat_max: float) -> int:
     """EASE CRS choice, same rule as /root/reference/xagg/core.py:475-486.
 
@@ -77,6 +93,23 @@ def forward(lon_deg, lat_deg, epsg: int):
     if epsg == EPSG_SOUTH:
         rho = A * np.sqrt(np.maximum(QP + q, 0.0))
         return rho * np.sin(lam), rho * np.cos(lam)
+    raise ValueError(f"unsupported EPSG:{epsg}")
+
+
+def forward_cols(lon: Column, lat: Column, epsg: int) -> tuple[Column, Column]:
+    """``forward`` as Spark column expressions: degree columns -> (x, y)
+    meter columns in the given EASE CRS."""
+    lam = sf.radians(lon)
+    q = q_auth_col(sf.radians(lat))
+    if epsg == EPSG_GLOBAL:
+        k0 = float(K0)
+        return sf.lit(A * k0) * lam, sf.lit(A) * q / sf.lit(2.0 * k0)
+    if epsg == EPSG_NORTH:
+        rho = sf.lit(A) * sf.sqrt(sf.greatest(sf.lit(QP) - q, sf.lit(0.0)))
+        return rho * sf.sin(lam), -rho * sf.cos(lam)
+    if epsg == EPSG_SOUTH:
+        rho = sf.lit(A) * sf.sqrt(sf.greatest(sf.lit(QP) + q, sf.lit(0.0)))
+        return rho * sf.sin(lam), rho * sf.cos(lam)
     raise ValueError(f"unsupported EPSG:{epsg}")
 
 

@@ -83,6 +83,11 @@ class GridSpec:
     def bounds_lon(self) -> np.ndarray:
         return synth_bounds(self.lon_axis(), is_lon=True)
 
+    def with_bounds(self) -> "AxesGrid":
+        """The grid as a bounded AxesGrid (get_bnds semantics, lat bounds
+        clamped at +-90) — the one GridSpec -> axes conversion."""
+        return AxesGrid(self.lat_axis(), self.lon_axis()).with_bounds()
+
     def to_dict(self) -> dict:
         return asdict(self)
 

@@ -33,7 +33,6 @@ reuses the weightmap, core.py:718-721).
 
 from __future__ import annotations
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -431,9 +430,3 @@ def aggregate_stats(pix_values: DataFrame, wm, dims=("var", "t"),
     return out.withColumn("n_valid",
                           F.coalesce("n_valid", F.lit(0)).cast("long"))
 
-
-def aggregate_pandas(pix_values: DataFrame, wm, dims=("var", "t"),
-                     value_col: str = "value") -> pd.DataFrame:
-    """Collect the tidy result sorted for parity fixtures."""
-    out = aggregate(pix_values, wm, dims, value_col)
-    return out.orderBy("poly_idx", *dims).toPandas()

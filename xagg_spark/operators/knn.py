@@ -90,48 +90,6 @@ BROADCAST_ROW_BUDGET = 1_000_000
 MAX_COARSEN_LEVELS = 3
 
 
-def _proj_cols(lon_col, lat_col, epsg: int):
-    """Spark-side EASE forward projection (same Snyder formulas as
-    geo.ellipsoid.forward, JVM expressions — no UDF)."""
-    lam = F.radians(lon_col)
-    e = _ell.E
-    e2 = _ell.E2
-    s = F.sin(F.radians(lat_col))
-    q = F.lit(1.0 - e2) * (s / (F.lit(1.0) - F.lit(e2) * s * s)
-                           - F.lit(1.0 / (2.0 * e))
-                           * F.log((F.lit(1.0) - F.lit(e) * s)
-                                   / (F.lit(1.0) + F.lit(e) * s)))
-    if epsg == _ell.EPSG_GLOBAL:
-        x = F.lit(_ell.A * _ell.K0) * lam
-        y = F.lit(_ell.A) * q / F.lit(2.0 * _ell.K0)
-        return x, y
-    if epsg == _ell.EPSG_NORTH:
-        rho = F.lit(_ell.A) * F.sqrt(F.greatest(F.lit(_ell.QP) - q, F.lit(0.0)))
-        return rho * F.sin(lam), -rho * F.cos(lam)
-    if epsg == _ell.EPSG_SOUTH:
-        rho = F.lit(_ell.A) * F.sqrt(F.greatest(F.lit(_ell.QP) + q, F.lit(0.0)))
-        return rho * F.sin(lam), rho * F.cos(lam)
-    raise ValueError(f"unsupported EPSG:{epsg}")
-
-
-def _pack_cell_col(res: int, ix, iy) -> F.Column:
-    """geo.cells.cell_id as a JVM column expression: (res<<58)|(ix<<29)|iy."""
-    return (F.lit(res).cast("long") * F.lit(1 << 58).cast("long")
-            + F.shiftleft(ix, 29) + iy)
-
-
-def _cell_id_col(lon_col, lat_col, res: int) -> F.Column:
-    """geo.cells.cell_of as a JVM column expression — identical packing
-    (lon wrapped, lat clamped) so pixel cells and cover cells meet on an
-    equi-join key."""
-    n = F.lit(1 << res)
-    ix = F.floor((lon_col + F.lit(180.0)) / F.lit(360.0) * n).cast("long")
-    iy = F.floor((lat_col + F.lit(90.0)) / F.lit(180.0) * n).cast("long")
-    ix = ((ix % n) + n) % n
-    iy = F.greatest(F.least(iy, n - F.lit(1)), F.lit(0))
-    return _pack_cell_col(res, ix, iy)
-
-
 def _matched_resolution(radius_deg: float) -> int:
     """Radius-matched resolution: ~4 cells across the search box in lon
     (~45 cells per center with lat at 2x density and boundary rounding)."""
@@ -197,8 +155,8 @@ def _with_proj(df: DataFrame, lon: str, lat: str, x: str, y: str,
     candidate pipeline; evaluating it per pixel (~10^6 rows) and per
     center instead of per candidate PAIR (~10^8 rows) removes >90% of the
     join's transcendental work (guide §2.3 — narrow/precompute before the
-    fan-out).  Same JVM expressions as before, so dist2 is bit-identical."""
-    px, py = _proj_cols(F.col(lon), F.col(lat), epsg)
+    fan-out).  The expressions are geo.ellipsoid.forward_cols."""
+    px, py = _ell.forward_cols(F.col(lon), F.col(lat), epsg)
     return df.withColumn(x, px).withColumn(y, py)
 
 
@@ -243,8 +201,9 @@ def _cover_df_jvm(spark: SparkSession, pending: pd.DataFrame,
     zero = F.lit(0).cast("long")
     c = c.withColumn("_lx", F.explode(F.sequence(zero, F.col("_nx") - 1)))
     c = c.withColumn("_ly", F.explode(F.sequence(zero, F.col("_ny") - 1)))
-    cell = _pack_cell_col(res, F.pmod(F.col("_x0") + F.col("_lx"), F.lit(n)),
-                          F.col("_y0") + F.col("_ly"))
+    cell = _cells.pack_cell_col(
+        res, F.pmod(F.col("_x0") + F.col("_lx"), F.lit(n)),
+        F.col("_y0") + F.col("_ly"))
     return (c.select("q_id", cell.alias("cell_id"), "c_lat", "c_lon",
                      "_cx", "_cy"), blocks)
 
@@ -333,7 +292,7 @@ def knn_pixels(spark: SparkSession, pixels: DataFrame, centers: pd.DataFrame,
         res, n_cover, build = _pick_build_side(pending, radius, n_pix)
         cover, blocks = _cover_df_jvm(spark, pending, radius, res, epsg)
         pix_cells = pix.withColumn(
-            "cell_id", _cell_id_col(F.col("lon"), F.col("lat"), res))
+            "cell_id", _cells.cell_id_col(F.col("lon"), F.col("lat"), res))
         j = _clip_and_dist(
             _candidate_join(pix_cells, cover, build, n_pix, n_cover),
             radius, wrap_lon)
@@ -401,6 +360,8 @@ def knn_pixels(spark: SparkSession, pixels: DataFrame, centers: pd.DataFrame,
                            (F.col("_p") + 1).cast("int").alias("rank"),
                            F.col("_s")["pix_idx"].alias("pix_idx"),
                            F.col("_s")["dist2"].alias("dist2")))
+        else:
+            free_local_checkpoint(top)       # no accepted row reads it
         rec = {"radius_deg": radius, "resolution": res,
                "pending": len(pending), "cover_rows": n_cover,
                "pixel_rows": n_pix, "build_side": build,

@@ -30,7 +30,6 @@ Scale notes (100 TB / 10^12 tiles):
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 
 import numpy as np
@@ -43,8 +42,7 @@ from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
 from ..geo import cells as _cells
 from ..geo import clip as _clip
 from ..geo import ellipsoid as _ell
-from ..geo.bounds import crosses_antimeridian
-from ..grid import AxesGrid, GridSpec
+from ..grid import GridSpec
 from ..polygons import PolygonSet
 
 
@@ -87,11 +85,7 @@ def _estimated_cover_cells(polys, res: int) -> float:
 def _grid_wraps(grid) -> bool:
     """True when any pixel's lon bounds wrap (lon0 > lon1) — decided on the
     driver from the axes so the no-wrap fast path skips a whole shuffle."""
-    from ..grid import AxesGrid, GridSpec
-    if isinstance(grid, GridSpec):
-        axes = AxesGrid(grid.lat_axis(), grid.lon_axis()).with_bounds()
-    else:
-        axes = grid.with_bounds()
+    axes = grid.with_bounds()
     return bool((axes.lon_bnds[:, 0] > axes.lon_bnds[:, 1]).any())
 
 
@@ -109,12 +103,8 @@ def pixel_geometry(spark: SparkSession, grid, num_partitions: int | None = None,
     plan.  ``weights_pdf`` (pix_idx, weight) merges an additional weight grid
     (reference process_weights same-grid fast path, core.py:171-225).
     """
-    if isinstance(grid, GridSpec):
-        axes = AxesGrid(grid.lat_axis(), grid.lon_axis()).with_bounds()
-        nlat, nlon = grid.nlat, grid.nlon
-    else:
-        axes = grid.with_bounds()
-        nlat, nlon = axes.nlat, axes.nlon
+    axes = grid.with_bounds()
+    nlat, nlon = axes.nlat, axes.nlon
 
     lat_pdf = pd.DataFrame({"iy": np.arange(nlat, dtype=np.int64),
                             "lat": axes.lat.astype(np.float64),
@@ -136,27 +126,6 @@ def pixel_geometry(spark: SparkSession, grid, num_partitions: int | None = None,
     return out
 
 
-def _q_auth_col(lat):
-    """Authalic q (Snyder eq. 3-12) as a JVM column expression."""
-    e2, e = _ell.E2, float(_ell.E)
-    s = F.sin(F.radians(lat))
-    return F.lit(1.0 - e2) * (
-        s / (F.lit(1.0) - F.lit(e2) * s * s)
-        - F.lit(1.0 / (2.0 * e))
-        * F.log((F.lit(1.0) - F.lit(e) * s) / (F.lit(1.0) + F.lit(e) * s)))
-
-
-def _cea_pixel_area_cols():
-    """Closed-form EPSG:6933 pixel area from (lat0, lat1, lon0, lon1)
-    columns — same Snyder math as geo.ellipsoid, as JVM column expressions
-    (whole-stage codegen; no Python)."""
-    a, k0 = _ell.A, float(_ell.K0)
-    dx = F.lit(a * k0) * (F.radians(F.col("lon1")) - F.radians(F.col("lon0")))
-    dy = F.lit(a) * (_q_auth_col(F.col("lat1")) - _q_auth_col(F.col("lat0"))) \
-        / F.lit(2.0 * k0)
-    return dx * dy
-
-
 def _pixel_area_cols(epsg: int):
     """Closed-form projected pixel area from (lat0, lat1, lon0, lon1)
     columns for ANY of the three EASE CRSes — pure JVM whole-stage codegen,
@@ -170,20 +139,19 @@ def _pixel_area_cols(epsg: int):
     four corners — the same formula the refine UDF uses for boundary cells,
     keeping interior and boundary areas mutually consistent."""
     if epsg == _ell.EPSG_GLOBAL:
-        return _cea_pixel_area_cols()
-    a, qp = _ell.A, float(_ell.QP)
-    north = epsg == _ell.EPSG_NORTH
-
-    def xy(lon, lat):
-        d = F.lit(qp) - _q_auth_col(lat) if north else F.lit(qp) + _q_auth_col(lat)
-        rho = F.lit(a) * F.sqrt(F.greatest(d, F.lit(0.0)))
-        lam = F.radians(lon)
-        return rho * F.sin(lam), (-rho if north else rho) * F.cos(lam)
-
-    xa, ya = xy(F.col("lon0"), F.col("lat0"))
-    xb, yb = xy(F.col("lon1"), F.col("lat0"))
-    xc, yc = xy(F.col("lon1"), F.col("lat1"))
-    xd, yd = xy(F.col("lon0"), F.col("lat1"))
+        # closed form A*K0*(rad(lon1) - rad(lon0)), not x1 - x0: the two
+        # round differently
+        a, k0 = _ell.A, float(_ell.K0)
+        dx = F.lit(a * k0) * (F.radians(F.col("lon1"))
+                              - F.radians(F.col("lon0")))
+        dy = F.lit(a) * (_ell.q_auth_col(F.radians(F.col("lat1")))
+                         - _ell.q_auth_col(F.radians(F.col("lat0")))) \
+            / F.lit(2.0 * k0)
+        return dx * dy
+    xa, ya = _ell.forward_cols(F.col("lon0"), F.col("lat0"), epsg)
+    xb, yb = _ell.forward_cols(F.col("lon1"), F.col("lat0"), epsg)
+    xc, yc = _ell.forward_cols(F.col("lon1"), F.col("lat1"), epsg)
+    xd, yd = _ell.forward_cols(F.col("lon0"), F.col("lat1"), epsg)
     return F.abs(xa * (yb - yd) + xb * (yc - ya)
                  + xc * (yd - yb) + xd * (ya - yc)) / F.lit(2.0)
 
@@ -241,12 +209,7 @@ def _refine_factory(rings_by_poly: dict, epsg: int,
             for r in rings_by_poly[pidx]:
                 x, y = _ell.forward(r[:, 0], r[:, 1], epsg)
                 prj.append(np.stack([x, y], axis=1))
-            edges = []
-            for ring in prj:
-                a = ring
-                b = np.roll(ring, -1, axis=0)
-                edges.append(np.concatenate([a, b], axis=1))  # xa,ya,xb,yb
-            E = np.concatenate(edges, axis=0)
+            E = _clip.ring_edges(prj)           # xa, ya, xb, yb
             sg = None
             if signs_by_poly is not None:
                 sg = signs_by_poly.get(pidx)
@@ -304,17 +267,9 @@ def _refine_factory(rings_by_poly: dict, epsg: int,
                     if len(ns) == 0:
                         continue
                     cin = np.ones(len(ns), dtype=bool)
-                    for cx, cy in ((cxa[ns, None], cya[ns, None]),
-                                   (cxb[ns, None], cyb[ns, None]),
-                                   (cxc[ns, None], cyc[ns, None]),
-                                   (cxd[ns, None], cyd[ns, None])):
-                        ya, yb = E[None, :, 1], E[None, :, 3]
-                        xa, xb = E[None, :, 0], E[None, :, 2]
-                        cross = (ya > cy) != (yb > cy)
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            xi = xa + (cy - ya) * (xb - xa) / (yb - ya)
-                        hit = cross & (xi > cx)
-                        cin &= (hit.sum(axis=1) % 2).astype(bool)
+                    for cx, cy in ((cxa, cya), (cxb, cyb),
+                                   (cxc, cyc), (cxd, cyd)):
+                        cin &= _clip.crossing_parity(cx[ns], cy[ns], E)
                     inside4[ns] = cin
                 # straight-edge quad shoelace: the exact projected pixel area
                 quad_area = 0.5 * np.abs(cxa * (cyb - cyd) + cxb * (cyc - cya)
@@ -675,23 +630,12 @@ def pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
         print("calculating overlaps between pixels and output polygons...")
     # polygon cell cover (df_cover from _overlap_prep), dilated one ring —
     # guarantees center-cell assignment of pixels misses nothing given the
-    # per-axis res cap
-    n = 1 << res
-
-    pix2 = split_antimeridian(pixels)
-
-    # cell assignment by pixel-half center: unique, deterministic
-    half_lon = (F.col("lon0") + F.col("lon1")) / 2.0
-    half_lat = (F.col("lat0") + F.col("lat1")) / 2.0
-    cells_n = F.lit(n)
-    ixc = F.floor((half_lon + 180.0) / 360.0 * cells_n).cast("long")
-    iyc = F.floor((half_lat + 90.0) / 180.0 * cells_n).cast("long")
-    ixc = ((ixc % cells_n) + cells_n) % cells_n
-    iyc = F.greatest(F.least(iyc, cells_n - 1), F.lit(0))
-    pix2 = pix2.withColumn(
-        "cell_id",
-        (F.lit(res).cast("long") * F.lit(1 << 58).cast("long"))
-        + F.shiftleft(ixc, 29) + iyc)
+    # per-axis res cap.  Cell assignment by pixel-half center: unique,
+    # deterministic.
+    pix2 = split_antimeridian(pixels).withColumn(
+        "cell_id", _cells.cell_id_col((F.col("lon0") + F.col("lon1")) / 2.0,
+                                      (F.col("lat0") + F.col("lat1")) / 2.0,
+                                      res))
 
     cand = pix2.join(F.broadcast(df_cover), "cell_id")
 

@@ -29,13 +29,7 @@ import numpy as np
 import pandas as pd
 
 from ..geo.clip import rect_rect_overlap_area_cea
-from ..grid import AxesGrid, GridSpec
-
-
-def _axes(grid) -> AxesGrid:
-    if isinstance(grid, GridSpec):
-        return AxesGrid(grid.lat_axis(), grid.lon_axis()).with_bounds()
-    return grid.with_bounds()
+from ..grid import AxesGrid
 
 
 def process_weights(data_grid, weights: np.ndarray, w_lat: np.ndarray,
@@ -56,7 +50,7 @@ def process_weights(data_grid, weights: np.ndarray, w_lat: np.ndarray,
     if nan_to_zero is None:
         nan_to_zero = get_options()["nan_to_zero_regridding"]
 
-    d = _axes(data_grid)
+    d = data_grid.with_bounds()
     weights = np.asarray(weights, dtype=np.float64)
     w_lat = np.asarray(w_lat, dtype=np.float64)
     w_lon = np.asarray(w_lon, dtype=np.float64)

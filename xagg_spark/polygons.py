@@ -3,8 +3,8 @@
 The reference takes a geopandas GeoDataFrame; without GEOS in this
 environment, polygons are plain numpy vertex rings.  Polygon counts are
 small relative to pixels (counties vs 10^12 tiles), so all per-polygon prep
-(poly_idx assignment, CRS pick, projection, cell cover) happens on the
-driver and ships to executors as a broadcast.
+(poly_idx assignment, CRS pick, cell cover) happens on the driver and ships
+to executors as a broadcast.
 
 poly_idx is assigned in input order — /root/reference/xagg/core.py:467
 (np.arange over the input), never from partition order.
@@ -12,7 +12,7 @@ poly_idx is assigned in input order — /root/reference/xagg/core.py:467
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -25,16 +25,6 @@ from .geo import ellipsoid as _ell
 def _ring_signed_area(r: np.ndarray) -> float:
     x, y = r[:, 0], r[:, 1]
     return float(0.5 * np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y))
-
-
-def _point_in_ring(px: float, py: float, r: np.ndarray) -> bool:
-    """Even-odd crossing test of a point against one lon/lat ring."""
-    x0, y0 = r[:, 0], r[:, 1]
-    x1, y1 = np.roll(x0, -1), np.roll(y0, -1)
-    cross = (y0 > py) != (y1 > py)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xi = x0 + (py - y0) * (x1 - x0) / (y1 - y0)
-    return bool((cross & (xi > px)).sum() % 2)
 
 
 def rect_ring(lon0: float, lat0: float, lon1: float, lat1: float) -> np.ndarray:
@@ -91,7 +81,8 @@ class PolygonSet:
         for poly in self.rings:
             sg = []
             for i, r in enumerate(poly):
-                depth = sum(_point_in_ring(r[0, 0], r[0, 1], o)
+                depth = sum(int(_clip.crossing_parity(
+                                r[:1, 0], r[:1, 1], _clip.ring_edges([o]))[0])
                             for j, o in enumerate(poly)
                             if j != i and len(o) >= 3)
                 sg.append(-1.0 if depth % 2 else 1.0)
@@ -117,17 +108,6 @@ class PolygonSet:
         _, lat0, _, lat1 = self.total_bounds()
         return _ell.pick_epsg(lat0, lat1)
 
-    def projected(self, epsg: int):
-        """poly_idx -> list of projected rings (N,2) float64."""
-        out = {}
-        for i, poly in enumerate(self.rings):
-            prj = []
-            for r in poly:
-                x, y = _ell.forward(r[:, 0], r[:, 1], epsg)
-                prj.append(np.stack([x, y], axis=1))
-            out[i] = prj
-        return out
-
     def _edge_pads(self):
         """Per-ring conservative pad (deg) for the lon/lat-chord-vs-
         projected-curve deviation of each edge; cached (geometry is
@@ -147,24 +127,6 @@ class PolygonSet:
         vals = [float(np.max(p)) for poly in self._edge_pads()
                 for p in poly if len(p)]
         return max(vals) if vals else 0.0
-
-    def cell_cover(self, res: int, dilate: bool = False) -> pd.DataFrame:
-        """(poly_idx, cell_id) cover rows for the broadcast prefilter.
-        dilate=True adds the 1-cell safety ring needed by center-cell pixel
-        assignment (see operators.overlaps)."""
-        pads = self._edge_pads()
-        pi_parts, ci_parts = [], []
-        for i, poly in enumerate(self.rings):
-            ids = []
-            for r, pd_ in zip(poly, pads[i]):
-                ids.append(_cells.cover_polygon(r[:, 0], r[:, 1], res,
-                                                dilate=dilate, pads=pd_))
-            ids = np.unique(np.concatenate(ids)) if ids else np.zeros(0, np.int64)
-            pi_parts.append(np.full(len(ids), i, dtype=np.int64))
-            ci_parts.append(ids)
-        return pd.DataFrame({
-            "poly_idx": np.concatenate(pi_parts) if pi_parts else np.zeros(0, np.int64),
-            "cell_id": np.concatenate(ci_parts) if ci_parts else np.zeros(0, np.int64)})
 
     def cell_cover_classified(self, res: int) -> pd.DataFrame:
         """(poly_idx, cell_id, full) — dilated cover with the safe-interior
