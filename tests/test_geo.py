@@ -167,6 +167,12 @@ def test_cover_bbox_and_polygon():
     assert set(pc.tolist()) <= set(grown.tolist())
     assert set(cells.tolist()) <= set(pc.tolist())
     assert len(pc) >= 1 and not full.any()
+    # lat bounds past the poles clamp to the edge rows, scalar or array
+    from xagg_spark.geo.cells import cell_range
+    assert cell_range(95.0, 100.0, 3, False) == (7, 7)
+    lo, hi = cell_range(np.array([95.0, -100.0]), np.array([100.0, -95.0]),
+                        3, False)
+    assert lo.tolist() == [7, 0] and hi.tolist() == [7, 0]
 
 
 def test_convex_pieces_nonconvex_quad():
@@ -187,3 +193,25 @@ def test_convex_pieces_nonconvex_quad():
 
     convex = np.array([[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [0.0, 2.0]])
     assert len(_convex_pieces(convex)) == 1
+
+
+def test_near_degenerate_edges_emit_no_overflow_warning():
+    """An edge whose dy (or dx) is tiny (1e-300, 1e-309) overflows the
+    crossing abscissa (the raster clip parameter) to inf.  The results
+    are still right, and neither the even-odd kernel nor the cover raster
+    may leak the RuntimeWarning to its callers."""
+    import warnings
+
+    from xagg_spark.geo.clip import crossing_parity, ring_edges
+
+    flat = np.array([[0.0, 0.0], [10.0, 1e-300], [10.0, 50.0], [0.0, 50.0]])
+    steep = np.array([[0.0, 0.0], [1e-309, 10.0], [5.0, 10.0], [5.0, 0.0]])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = crossing_parity(np.array([5.0, 5.0]), np.array([1e10, 25.0]),
+                              ring_edges([flat]))
+        ids, _ = cover_polygon_classified([steep], res=7)
+    assert got.tolist() == [False, True]
+    assert set(cover_bbox(0.0, 0.0, 5.0, 10.0, res=7).tolist()) \
+        <= set(ids.tolist())
+

@@ -18,7 +18,8 @@ import pytest
 from xagg_spark.geo import ellipsoid as _ell
 from xagg_spark.geo.clip import rect_rect_overlap_area_cea
 from xagg_spark.grid import GridSpec
-from xagg_spark.operators.overlaps import pixel_overlaps
+from xagg_spark.operators.overlaps import (_overlap_core, _overlap_prep,
+                                           pixel_geometry, pixel_overlaps)
 from xagg_spark.polygons import PolygonSet, rect_ring
 
 
@@ -104,11 +105,14 @@ def test_polar_interior_uses_jvm_fast_path(spark):
     polys = PolygonSet([ring], pd.DataFrame({"name": ["arctic"]}))
     grid = GridSpec(lat_edge=60.0, lon_edge=0.0, dlat=0.25, dlon=0.25,
                     nlat=80, nlon=160, tile_h=10, tile_w=10)
-    # raw_areas=True keeps the logical plan visible (the normalized path
-    # local-checkpoints into a LogicalRDD, hiding the operator tree)
-    wm = pixel_overlaps(spark, grid, polys, raw_areas=True)
-    assert wm.epsg == _ell.EPSG_NORTH
-    plan = wm.overlaps._jdf.queryExecution().optimizedPlan().toString()
+    # the lazy overlap core keeps the logical plan visible (the finished
+    # WeightMap local-checkpoints into a LogicalRDD, hiding the operator
+    # tree)
+    assert polys.pick_epsg() == _ell.EPSG_NORTH
+    raw, _ = _overlap_core(spark, grid, polys, pixel_geometry(spark, grid),
+                           _overlap_prep(spark, grid, polys),
+                           _ell.EPSG_NORTH)
+    plan = raw._jdf.queryExecution().optimizedPlan().toString()
     # assert the Union survived the optimizer (i.e. the full branch is
     # non-empty) and the closed-form area expression is JVM-side (SIN/LOG
     # column expressions in the plan, not Python)

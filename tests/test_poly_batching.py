@@ -64,7 +64,7 @@ def test_batched_build_matches_unbatched_exactly(spark, monkeypatch):
     monkeypatch.setattr(_ov, "POLY_BATCH_MAX_RINGS", 2)
     assert _cover_budget_unreachable(polys)          # forced regime
     got_wm = pixel_overlaps(spark, GRID, polys)
-    assert got_wm._ckpts is not None and len(got_wm._ckpts) == 3
+    assert len(got_wm._blocks) == 3
     assert got_wm.epsg == want.epsg                  # global J2 pick
     assert got_wm.n_rows == want.n_rows
     g = (got_wm.overlaps.select("poly_idx", "pix_idx", "rel_area")
@@ -76,7 +76,7 @@ def test_batched_build_matches_unbatched_exactly(spark, monkeypatch):
     # per-polygon normalization survives batching: rel_area sums to 1
     sums = g.groupby("poly_idx")["rel_area"].sum()
     assert np.allclose(sums, 1.0, rtol=0, atol=1e-9)
-    got_wm.unpersist()                               # exercises _ckpts
+    got_wm.unpersist()                               # frees each block
 
 
 def test_batched_empty_batch_and_all_empty(spark, monkeypatch):
@@ -100,9 +100,6 @@ def test_unbatchable_paths_fail_fast(spark, monkeypatch):
     monkeypatch.setattr(_ov, "COVER_CELL_BUDGET", 1)
     polys = PolygonSet([rect_ring(1.0, 1.0, 5.0, 5.0),
                         rect_ring(6.0, 1.0, 9.0, 5.0)])
-    # raw_areas (the resumable build buckets by pixels) cannot batch
-    with pytest.raises(ValueError, match="raw_areas"):
-        pixel_overlaps(spark, GRID, polys, raw_areas=True)
     # direct _overlap_prep callers get the guidance error, not res 0
     with pytest.raises(ValueError, match="COVER_CELL_BUDGET"):
         _ov._overlap_prep(spark, GRID, polys)
@@ -125,6 +122,26 @@ def test_single_polygon_over_budget_raises_not_recurses(spark, monkeypatch):
             [rect_ring(10.0, 10.0, 12.0, 12.0), big]))
 
 
+def test_explicit_batch_cap_above_budget_is_capped(spark, monkeypatch):
+    """An explicit _batch_max_rings larger than COVER_CELL_BUDGET is capped
+    at the budget, so no batch's cover overflows the broadcast: the build
+    succeeds in budget-sized batches with the unbatched values."""
+    polys = _six_polys()
+    want = pixel_overlaps(spark, GRID, polys)
+    w = (want.overlaps.select("poly_idx", "pix_idx", "rel_area")
+             .toPandas().sort_values(["poly_idx", "pix_idx"])
+             .reset_index(drop=True))
+    want.unpersist()
+    monkeypatch.setattr(_ov, "COVER_CELL_BUDGET", 2)
+    got_wm = pixel_overlaps(spark, GRID, polys, _batch_max_rings=10)
+    assert len(got_wm._blocks) == 3
+    g = (got_wm.overlaps.select("poly_idx", "pix_idx", "rel_area")
+               .toPandas().sort_values(["poly_idx", "pix_idx"])
+               .reset_index(drop=True))
+    assert g["pix_idx"].tolist() == w["pix_idx"].tolist()
+    assert np.allclose(g["rel_area"], w["rel_area"], rtol=0, atol=1e-12)
+    got_wm.unpersist()
+
 def test_batched_build_threads_weights(spark, monkeypatch):
     """The secondary weight grid must survive batching: every batch joins
     the same (pix_idx, weight) table, and the unioned overlaps carry the
@@ -144,7 +161,7 @@ def test_batched_build_threads_weights(spark, monkeypatch):
     monkeypatch.setattr(_ov, "COVER_CELL_BUDGET", 4)
     monkeypatch.setattr(_ov, "POLY_BATCH_MAX_RINGS", 2)
     got_wm = pixel_overlaps(spark, GRID, polys, weights_pdf=wpdf)
-    assert got_wm._ckpts is not None and got_wm.has_weights
+    assert len(got_wm._blocks) == 3 and got_wm.has_weights
     g = (got_wm.overlaps.select("poly_idx", "pix_idx", "rel_area", "weight")
                .toPandas().sort_values(["poly_idx", "pix_idx"])
                .reset_index(drop=True))

@@ -28,21 +28,28 @@ def _partition_counts(df) -> np.ndarray:
     return pdf["count"].to_numpy()
 
 
+def _core_plan(spark, salt: int) -> str:
+    """Executed plan of the lazy overlap core (no localCheckpoint
+    truncation, unlike the finished WeightMap)."""
+    from xagg_spark.operators.overlaps import (_overlap_core, _overlap_prep,
+                                               pixel_geometry)
+    polys = _skew_polys()
+    raw, _ = _overlap_core(spark, QGRID, polys, pixel_geometry(spark, QGRID),
+                           _overlap_prep(spark, QGRID, polys),
+                           polys.pick_epsg(), salt=salt)
+    return raw._jdf.queryExecution().executedPlan().toString()
+
+
 def test_salt_inserts_hash_salt_exchange_before_refine(spark):
-    """raw_areas=True keeps the plan lazy (no localCheckpoint truncation),
-    so the refine pipeline's physical plan is inspectable: salt>0 must add
-    a hashpartitioning exchange on (poly_idx, pix_idx % salt) — NOT a
-    round-robin, which would shatter the refine UDF's per-polygon
-    vectorization groups (measured ~2x slower on the hot bench fixture) —
-    and salt=0 must add no exchange at all."""
-    salted = pixel_overlaps(spark, QGRID, _skew_polys(), salt=4,
-                            raw_areas=True)
-    ps = salted.overlaps._jdf.queryExecution().executedPlan().toString()
+    """The lazy overlap core keeps the refine pipeline's physical plan
+    inspectable: salt>0 must add a hashpartitioning exchange on
+    (poly_idx, pix_idx % salt) — NOT a round-robin, which would shatter
+    the refine UDF's per-polygon vectorization groups (measured ~2x slower
+    on the hot bench fixture) — and salt=0 must add no exchange at all."""
+    ps = _core_plan(spark, salt=4)
     assert "hashpartitioning(poly_idx" in ps
     assert "RoundRobinPartitioning" not in ps
-    unsalted = pixel_overlaps(spark, QGRID, _skew_polys(), salt=0,
-                              raw_areas=True)
-    pu = unsalted.overlaps._jdf.queryExecution().executedPlan().toString()
+    pu = _core_plan(spark, salt=0)
     assert "hashpartitioning(poly_idx" not in pu
     assert "RoundRobinPartitioning" not in pu
 

@@ -205,7 +205,7 @@ def q_pixel_overlaps_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import pixel_overlaps
     wm = pixel_overlaps(spark, QGRID, _qpolys(), _batch_max_rings=3)
     # 12 polygons / 3-ring batches = 4 per-batch checkpoints
-    assert wm._ckpts is not None and len(wm._ckpts) == 4, \
+    assert len(wm._blocks) == 4, \
         "batched fixture did not take the batched path"
     return wm.overlaps.select(
         "poly_idx", "pix_idx",

@@ -67,16 +67,20 @@ def cell_id_col(lon: Column, lat: Column, res: int) -> Column:
 
 
 def cell_range(lo, hi, res: int, is_lon: bool):
-    """Index range [i0, i1] of cells touched by the interval [lo, hi]."""
+    """Index range [i0, i1] of cells touched by the interval [lo, hi],
+    elementwise over array bounds.  Lon indices are left unwrapped (callers
+    wrap mod 2^res); lat indices clamp to the grid.  i1 >= i0 always."""
     n = 1 << res
     span = 360.0 if is_lon else 180.0
     off = 180.0 if is_lon else 90.0
-    i0 = int(np.floor((lo + off) / span * n))
-    i1 = int(np.ceil((hi + off) / span * n)) - 1
+    i0 = np.floor((np.asarray(lo, dtype=np.float64) + off) / span * n) \
+        .astype(np.int64)
+    i1 = np.ceil((np.asarray(hi, dtype=np.float64) + off) / span * n) \
+        .astype(np.int64) - 1
     if not is_lon:
-        i0 = max(i0, 0)
-        i1 = min(i1, n - 1)
-    return i0, max(i1, i0)
+        i0 = np.clip(i0, 0, n - 1)
+        i1 = np.clip(i1, 0, n - 1)
+    return i0, np.maximum(i1, i0)
 
 
 def cover_bbox(lon0: float, lat0: float, lon1: float, lat1: float, res: int) -> np.ndarray:
@@ -214,26 +218,29 @@ def _rasterize_edges(lons, lats, pads, res, x0, x1, y0, y1) -> np.ndarray:
     ex1, ey1 = np.roll(lons, -1), np.roll(lats, -1)
     if pads is None:
         pads = np.zeros(len(lons))
-    for k in range(len(lons)):
-        ax, ay, bx, by = ex0[k], ey0[k], ex1[k], ey1[k]
-        pad = float(pads[k])
-        gx0 = int(np.floor((min(ax, bx) - pad + 180.0) / cw))
-        gx1 = int(np.floor((max(ax, bx) + pad + 180.0) / cw))
-        for gx in range(max(gx0, x0), min(gx1, x1) + 1):
-            # segment y-range within this column (clip segment to the
-            # column lon span widened by pad; conservative)
-            cxa = -180.0 + gx * cw - pad
-            cxb = cxa + cw + 2.0 * pad
-            if ax == bx:
-                ylo, yhi = min(ay, by), max(ay, by)
-            else:
-                t0 = np.clip((cxa - ax) / (bx - ax), 0.0, 1.0)
-                t1 = np.clip((cxb - ax) / (bx - ax), 0.0, 1.0)
-                ya_ = ay + t0 * (by - ay)
-                yb_ = ay + t1 * (by - ay)
-                ylo, yhi = min(ya_, yb_), max(ya_, yb_)
-            gy0 = max(int(np.floor((ylo - pad + 90.0) / ch)), y0)
-            gy1 = min(int(np.floor((yhi + pad + 90.0) / ch)), y1)
-            if gy1 >= gy0:
-                mark[gx - x0, gy0 - y0:gy1 - y0 + 1] = True
+    # a near-vertical edge (bx - ax ~ 1e-309) overflows t to +-inf, which
+    # the clip to [0, 1] turns into the edge's whole y-range
+    with np.errstate(over="ignore"):
+        for k in range(len(lons)):
+            ax, ay, bx, by = ex0[k], ey0[k], ex1[k], ey1[k]
+            pad = float(pads[k])
+            gx0 = int(np.floor((min(ax, bx) - pad + 180.0) / cw))
+            gx1 = int(np.floor((max(ax, bx) + pad + 180.0) / cw))
+            for gx in range(max(gx0, x0), min(gx1, x1) + 1):
+                # segment y-range within this column (clip segment to the
+                # column lon span widened by pad; conservative)
+                cxa = -180.0 + gx * cw - pad
+                cxb = cxa + cw + 2.0 * pad
+                if ax == bx:
+                    ylo, yhi = min(ay, by), max(ay, by)
+                else:
+                    t0 = np.clip((cxa - ax) / (bx - ax), 0.0, 1.0)
+                    t1 = np.clip((cxb - ax) / (bx - ax), 0.0, 1.0)
+                    ya_ = ay + t0 * (by - ay)
+                    yb_ = ay + t1 * (by - ay)
+                    ylo, yhi = min(ya_, yb_), max(ya_, yb_)
+                gy0 = max(int(np.floor((ylo - pad + 90.0) / ch)), y0)
+                gy1 = min(int(np.floor((yhi + pad + 90.0) / ch)), y1)
+                if gy1 >= gy0:
+                    mark[gx - x0, gy0 - y0:gy1 - y0 + 1] = True
     return mark

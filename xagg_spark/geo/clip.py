@@ -48,7 +48,7 @@ def crossing_parity(px: np.ndarray, py: np.ndarray,
     xa, ya = edges[None, :, 0], edges[None, :, 1]
     xb, yb = edges[None, :, 2], edges[None, :, 3]
     cross = (ya > py) != (yb > py)
-    with np.errstate(divide="ignore", invalid="ignore"):
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
         xi = xa + (py - ya) * (xb - xa) / (yb - ya)
     return ((cross & (xi > px)).sum(axis=1) % 2).astype(bool)
 

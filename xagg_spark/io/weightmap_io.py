@@ -230,7 +230,8 @@ def _wm_from_agg(spark, agg: pd.DataFrame, polys, grid, weights_pdf,
     overlaps = spark.createDataFrame(pdf).localCheckpoint(eager=True)
     return WeightMap(overlaps=overlaps, polys=polys, grid=grid,
                      epsg=polys.pick_epsg(),
-                     has_weights=weights_pdf is not None, n_rows=len(pdf))
+                     has_weights=weights_pdf is not None, n_rows=len(pdf),
+                     _blocks=[overlaps])
 
 
 # ---------------------------------------------------------------------------
@@ -254,7 +255,8 @@ def resume_pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
     build: 12 sequential full pixel_overlaps jobs, each rebuilding the
     polygon cover on the driver, re-broadcasting it, re-scanning the whole
     pixel side, and persisting+counting before the write):
-    - the cover is prepared ONCE per run (_overlap_prep) and shared;
+    - the cover is prepared ONCE per run (_overlap_prep), shared, and
+      freed after the last wave;
     - pending buckets run in WAVES of ``wave_size``: ONE Spark job per
       wave computes raw areas for the wave's pixels (single scan, single
       cover broadcast) and writes them ``partitionBy(bucket)`` to a tmp
@@ -268,8 +270,9 @@ def resume_pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
 
     Returns (WeightMap, n_buckets_computed_this_run).
     """
-    from ..operators.overlaps import (WeightMap, _overlap_prep,
-                                      pixel_geometry, pixel_overlaps)
+    from ..operators.overlaps import (_finish_weightmap, _overlap_core,
+                                      _overlap_prep, pixel_geometry)
+    from ..session import free_local_checkpoint
 
     os.makedirs(checkpoint, exist_ok=True)
     state_path = os.path.join(checkpoint, "_buckets.json")
@@ -294,6 +297,7 @@ def resume_pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
     else:
         killed = False
     prep = _overlap_prep(spark, grid, polys) if pending else None
+    epsg = polys.pick_epsg()
 
     def _commit_state():
         tmp = state_path + ".tmp"
@@ -329,15 +333,11 @@ def resume_pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
         pix_w = pixels_all.filter(
             F.pmod(F.col("pix_idx"), F.lit(n_buckets))
             .isin([int(b) for b in wave]))
-        wm_w = pixel_overlaps(spark, grid, polys, weights_pdf=None,
-                              pixels=pix_w, raw_areas=True,
-                              pixels_have_weights=weights_pdf is not None,
-                              _prep=prep)
-        (wm_w.overlaps
-             .withColumn("bucket", F.pmod(F.col("pix_idx"), F.lit(n_buckets)))
+        raw, accs = _overlap_core(spark, grid, polys, pix_w, prep, epsg)
+        (raw.withColumn("bucket", F.pmod(F.col("pix_idx"), F.lit(n_buckets)))
              .write.partitionBy("bucket").mode("overwrite").parquet(tmpdir))
         # the write above is the wave's materialization — the refine
-        # accumulators are valid only NOW (lazy raw_areas path); carry
+        # accumulators are valid only NOW (the core is lazy); carry
         # their totals in the build state so the stitched WeightMap and
         # every persisted manifest see real counters, not vacuous zeros.
         # The increment is PERSISTED only with the wave's LAST bucket
@@ -347,8 +347,7 @@ def resume_pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
         # killed wave's share is dropped); like all Spark accumulators
         # updated in a transformation they can also overcount under task
         # retries/speculation — diagnostic, not lineage.
-        wave_nb = int(wm_w._accs[0].value)
-        wave_nc = int(wm_w._accs[1].value)
+        wave_nb, wave_nc = int(accs[0].value), int(accs[1].value)
         # per-bucket lineage stats in ONE job over the written wave
         # (north_rule: "per-partition lineage: cell range, row counts,
         # overlap-weight checksums") — read back from the committed bytes
@@ -363,39 +362,43 @@ def resume_pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
     pool = ThreadPoolExecutor(max_workers=2) if len(waves) > 1 else None
     futures = ([pool.submit(_run_wave, wi, wave)
                 for wi, wave in enumerate(waves)] if pool else None)
-    for wi, wave in enumerate(waves):
-        if futures is not None:
-            tmpdir, stats, wave_nb, wave_nc = futures[wi].result()
-        else:
-            tmpdir, stats, wave_nb, wave_nc = _run_wave(wi, wave)
-        for b in wave:
-            part = os.path.join(checkpoint, f"bucket={b}")
-            shutil.rmtree(part, ignore_errors=True)
-            src = os.path.join(tmpdir, f"bucket={b}")
-            if os.path.exists(src):
-                os.rename(src, part)
+    try:
+        for wi, wave in enumerate(waves):
+            if futures is not None:
+                tmpdir, stats, wave_nb, wave_nc = futures[wi].result()
             else:
-                # bucket with no overlaps: write an empty marker partition
-                spark.createDataFrame([], schema=_bucket_ddl) \
-                     .write.mode("overwrite").parquet(part)
-            # commit marker LAST: rename/write without it is not committed
-            open(os.path.join(part, "_SUCCESS"), "w").close()
-            st = stats.get(int(b))
-            state["done"].append(str(b))
-            state.setdefault("lineage", {})[str(b)] = {
-                "rows": int(st["n"]) if st else 0,
-                "area_checksum": float(st["area_sum"]) if st else 0.0}
-            if b == wave[-1]:     # wave complete: now safe to persist its
-                rs = state.setdefault(     # refine increment exactly once
-                    "refine_stats", {"n_boundary_refined": 0,
-                                     "n_nonconvex_fallback": 0})
-                rs["n_boundary_refined"] += wave_nb
-                rs["n_nonconvex_fallback"] += wave_nc
-            computed += 1
-            _commit_state()
-        shutil.rmtree(tmpdir, ignore_errors=True)
-    if pool is not None:
-        pool.shutdown(wait=False)
+                tmpdir, stats, wave_nb, wave_nc = _run_wave(wi, wave)
+            for b in wave:
+                part = os.path.join(checkpoint, f"bucket={b}")
+                shutil.rmtree(part, ignore_errors=True)
+                src = os.path.join(tmpdir, f"bucket={b}")
+                if os.path.exists(src):
+                    os.rename(src, part)
+                else:
+                    # bucket with no overlaps: write an empty marker partition
+                    spark.createDataFrame([], schema=_bucket_ddl) \
+                         .write.mode("overwrite").parquet(part)
+                # commit marker LAST: rename/write without it is not committed
+                open(os.path.join(part, "_SUCCESS"), "w").close()
+                st = stats.get(int(b))
+                state["done"].append(str(b))
+                state.setdefault("lineage", {})[str(b)] = {
+                    "rows": int(st["n"]) if st else 0,
+                    "area_checksum": float(st["area_sum"]) if st else 0.0}
+                if b == wave[-1]:     # wave complete: now safe to persist its
+                    rs = state.setdefault(     # refine increment exactly once
+                        "refine_stats", {"n_boundary_refined": 0,
+                                         "n_nonconvex_fallback": 0})
+                    rs["n_boundary_refined"] += wave_nb
+                    rs["n_nonconvex_fallback"] += wave_nc
+                computed += 1
+                _commit_state()
+            shutil.rmtree(tmpdir, ignore_errors=True)
+    finally:
+        if pool is not None:
+            pool.shutdown(wait=True, cancel_futures=True)
+        if prep is not None:          # every wave has read the cover
+            free_local_checkpoint(prep[1])
     # a crash between a wave's bucket commits and its rmtree above leaves
     # _wave<i>.tmp behind; a later resume with ZERO pending buckets never
     # enters the wave loop, so clean up unconditionally here — the stale
@@ -407,38 +410,13 @@ def resume_pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
         raise RuntimeError(f"simulated failure after {computed} buckets")
 
     # stitch: buckets hold RAW clip areas; normalize globally per polygon
-    # (exact A1 semantics — identical to the non-resumable path).  Same
-    # window-free normalization as pixel_overlaps: a Window.partitionBy
-    # (poly_idx) would put a domain-scale polygon's millions of rows in one
-    # partition — aggregate tiny per-polygon totals with map-side partials
-    # and broadcast them back instead.
+    # with the same finish step as pixel_overlaps (exact A1 semantics), over
+    # the persisted bucket read
     parts = [os.path.join(checkpoint, f"bucket={b}") for b in range(n_buckets)]
     dfs = spark.read.parquet(*[p for p in parts if os.path.exists(os.path.join(p, "_SUCCESS"))]).persist()
-    # per-polygon totals collected to the driver (<= n_poly rows — the
-    # PolygonSet is driver-resident by construction): normalization is then
-    # a local-relation broadcast join over the cached buckets, with no
-    # totals sub-job re-run on every downstream scan (same shape as
-    # pixel_overlaps' r3 single-pass normalize)
-    tot = dfs.groupBy("poly_idx").agg(F.sum("area").alias("_tot"),
-                                      F.count(F.lit(1)).alias("_n")).toPandas()
-    n_rows = int(tot["_n"].sum())
-    if n_rows == 0:
-        from ..operators.overlaps import NoOverlapError
-        raise NoOverlapError("no overlaps in any bucket")
-    overlaps = (dfs.join(F.broadcast(spark.createDataFrame(tot[["poly_idx", "_tot"]])),
-                         "poly_idx")
-                   .withColumn("rel_area", F.col("area") / F.col("_tot"))
-                   .drop("area", "_tot"))
-    epsg = polys.pick_epsg()
     # build-health counters accumulated at wave materialization time
     # (possibly across several kill/resume runs via the build state)
     rs = state.get("refine_stats", {})
-    n_bnd = int(rs.get("n_boundary_refined", 0))
-    n_ncx = int(rs.get("n_nonconvex_fallback", 0))
-    from ..operators.overlaps import _warn_nonconvex_fallback
-    _warn_nonconvex_fallback(n_bnd, n_ncx)
-    return WeightMap(overlaps=overlaps, polys=polys, grid=grid,
-                     epsg=epsg, has_weights=weights_pdf is not None,
-                     n_rows=n_rows, _ckpt=dfs,
-                     n_boundary_refined=n_bnd,
-                     n_nonconvex_fallback=n_ncx), computed
+    return _finish_weightmap(spark, [dfs], polys, grid, epsg,
+                             int(rs.get("n_boundary_refined", 0)),
+                             int(rs.get("n_nonconvex_fallback", 0))), computed

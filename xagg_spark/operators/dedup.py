@@ -14,7 +14,7 @@ Designed for 10^9+-document corpora:
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from ..session import free_local_checkpoint
 

@@ -100,28 +100,24 @@ def _matched_resolution(radius_deg: float) -> int:
 def _cover_extents(pending: pd.DataFrame, radius_deg: float, res: int):
     """Per-center cell index ranges of the search box at this resolution:
     int64 arrays (x0, nx, y0, ny); the center's ring cover is the nx x ny
-    cells from (x0, y0), ix wrapped mod 2^res.  Same semantics as
-    geo.cells.cover_bbox per center: lon indices wrap (antimeridian boxes
-    cover cells on both sides), a box spanning the full lon circle covers
-    each physical cell exactly once, lat indices clamp to the grid.
-    Vectorized over centers; the cover has exactly sum(nx * ny) rows."""
+    cells from (x0, y0), ix wrapped mod 2^res.  The index ranges are
+    geo.cells.cell_range (lat indices clamp to the grid); kNN adds only the
+    lon wrap (antimeridian boxes cover cells on both sides) and the full
+    circle (a box spanning all lons covers each physical cell exactly
+    once).  Vectorized over centers; the cover has exactly sum(nx * ny)
+    rows."""
     n = 1 << res
     clon = pending["c_lon"].to_numpy(dtype=np.float64)
     clat = pending["c_lat"].to_numpy(dtype=np.float64)
-    x0 = np.floor((clon - radius_deg + 180.0) / 360.0 * n).astype(np.int64)
-    x1 = np.ceil((clon + radius_deg + 180.0) / 360.0 * n).astype(np.int64) - 1
-    nx = np.maximum(x1, x0) - x0 + 1
+    x0, x1 = _cells.cell_range(clon - radius_deg, clon + radius_deg, res,
+                               True)
+    nx = x1 - x0 + 1
     full = nx >= n
     x0 = np.where(full, 0, x0 % n)
     nx = np.where(full, n, nx)
-    lat_lo = np.maximum(clat - radius_deg, -90.0)
-    lat_hi = np.minimum(clat + radius_deg, 90.0)
-    y0 = np.clip(np.floor((lat_lo + 90.0) / 180.0 * n).astype(np.int64),
-                 0, n - 1)
-    y1 = np.clip(np.ceil((lat_hi + 90.0) / 180.0 * n).astype(np.int64) - 1,
-                 0, n - 1)
-    ny = np.maximum(y1, y0) - y0 + 1
-    return x0, nx, y0, ny
+    y0, y1 = _cells.cell_range(clat - radius_deg, clat + radius_deg, res,
+                               False)
+    return x0, nx, y0, y1 - y0 + 1
 
 
 def _cover_row_count(pending: pd.DataFrame, radius_deg: float,

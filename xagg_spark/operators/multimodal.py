@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (ArrayType, BinaryType, BooleanType, DoubleType,
                                FloatType, IntegerType, LongType, StringType,

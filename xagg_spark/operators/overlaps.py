@@ -12,9 +12,9 @@ get_pixel_overlaps) with a Spark-first two-phase plan:
        fully-inside / fully-outside fast path so the O(clip) work is only
        spent on polygon-boundary pixels
     -> per-(poly,pixel) area sum (antimeridian halves add, reference G2)
-    -> window-normalized rel_area per polygon (reference A1 semantics:
-       rel_area sums to 1 over ALL overlapping pixels,
-       /root/reference/xagg/core.py:521)
+    -> one materialization of the raw areas, then rel_area normalized per
+       polygon (reference A1 semantics: rel_area sums to 1 over ALL
+       overlapping pixels, reference xagg/core.py:521)
 
 Scale notes (100 TB / 10^12 tiles):
 - the polygon side (cover + projected rings) is broadcast: no shuffle of the
@@ -30,7 +30,7 @@ Scale notes (100 TB / 10^12 tiles):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
@@ -48,6 +48,10 @@ from ..polygons import PolygonSet
 
 class NoOverlapError(Exception):
     """Same error contract as /root/reference/xagg/core.py:25-27, 499-500."""
+
+    def __init__(self, msg: str = "No `ds` grid cells overlapped with any "
+                 "polygon in `gdf_in`. Check the input `ds` and `gdf_in`."):
+        super().__init__(msg)
 
 
 # max estimated polygon-cover cells shipped as the broadcast dimension
@@ -354,17 +358,9 @@ class WeightMap:
     n_boundary_refined: int = 0   # pixels refined through the batched clip
     n_nonconvex_fallback: int = 0  # of those, non-convex-quad per-pixel
                                    # fallbacks (>1% warns at build time)
-    _ckpt: DataFrame | None = None  # the actually-checkpointed DF (overlaps
-                                    # may be a cheap derived view over it);
-                                    # unpersist() must free THESE blocks
-    _accs: tuple | None = None    # (boundary, nonconvex) accumulators on the
-                                  # LAZY raw_areas path: nothing has executed
-                                  # at construction time, so the caller must
-                                  # read .value AFTER materializing (the
-                                  # resumable build does, per wave)
-    _ckpts: list | None = None    # batched builds: the per-batch
-                                  # checkpointed tables (overlaps is their
-                                  # union view) — unpersist frees each
+    _blocks: list = field(default_factory=list)  # the materialized
+                                  # tables overlaps is a view over (one per
+                                  # polygon batch); unpersist() frees each
 
     def agg_pandas(self) -> pd.DataFrame:
         """Reconstitute the xagg-shaped `wm.agg` frame (lists per polygon,
@@ -385,20 +381,16 @@ class WeightMap:
         save_weightmap(self, path, overwrite=overwrite)
 
     def unpersist(self) -> None:
-        """Free the weightmap's materialized blocks.  The overlap table is
-        localCheckpoint'ed, and DataFrame.unpersist is a NO-OP for
-        checkpointed plans — the blocks otherwise live until the JVM GCs
-        the RDD, so repeated weightmap builds in one session accumulate
-        storage and degrade 2-3x.  This reaches the LogicalRDD directly;
-        best-effort for non-checkpointed overlap tables.  overlaps may be
-        a derived view (normalization join) over the checkpointed table —
-        _ckpt points at the DF whose blocks actually need freeing."""
-        targets = (self._ckpts if self._ckpts is not None
-                   else [self._ckpt if self._ckpt is not None
-                         else self.overlaps])
+        """Free the weightmap's materialized blocks: every table in
+        ``_blocks``.  DataFrame.unpersist is a NO-OP for checkpointed
+        plans — the blocks otherwise live until the JVM GCs the RDD, so
+        repeated weightmap builds in one session accumulate storage and
+        degrade 2-3x.  A weightmap with no blocks (loaded from storage)
+        best-effort unpersists ``overlaps`` itself, releasing a caller's
+        ``.cache()``."""
         from ..session import free_local_checkpoint
-        for target in targets:
-            free_local_checkpoint(target)
+        for block in self._blocks or [self.overlaps]:
+            free_local_checkpoint(block)
 
 
 def split_antimeridian(pixels: DataFrame) -> DataFrame:
@@ -509,8 +501,7 @@ def _overlap_prep(spark: SparkSession, grid, polys: PolygonSet,
 
     cover = polys.cell_cover_classified(res)
     if len(cover) == 0:
-        raise NoOverlapError("No `ds` grid cells overlapped with any polygon in `gdf_in`. "
-                             "Check the input `ds` and `gdf_in`.")
+        raise NoOverlapError()
     # materialize the cover as checkpointed blocks: every job that uses
     # the broadcast (candidate join, resume waves, repeated builds sharing
     # _prep) re-executes the broadcast child, and scanning the
@@ -526,11 +517,7 @@ def pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
                    res: int | None = None,
                    subset_bbox: bool = True,
                    salt: int = 0,
-                   pixels: DataFrame | None = None,
-                   raw_areas: bool = False,
-                   pixels_have_weights: bool = False,
                    _prep: tuple | None = None,
-                   _epsg: int | None = None,
                    _batch_max_rings: int | None = None) -> WeightMap:
     """Build the weightmap (facade, reference wrappers.py:10-104).
 
@@ -538,78 +525,119 @@ def pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
     (pix_idx, weight) additional weight grid already on this grid (different
     grids go through operators.regrid first).  salt>0 repartitions candidates
     to `salt` x parallelism before the refine UDF for hot-cell skew.
-    pixels_have_weights: set when a caller-supplied ``pixels`` DataFrame
-    already carries a weight column (the resumable bucketed path), so the
-    weight is threaded through refine and checkpointed.
     _prep: a (res, df_cover) pair from _overlap_prep, for callers that run
-    MANY sub-jobs over the same (grid, polys) (the resumable bucketed
-    build) — skips recomputing the polygon cover per call.
-    raw_areas=True returns UN-normalized clip areas and is fully LAZY (no
-    persist, no count — n_rows is None): the bucketed build writes the
-    result straight to parquet, one materialization.
+    MANY builds over the same (grid, polys) — skips recomputing the polygon
+    cover per call; the caller owns (and frees) it.  _batch_max_rings
+    forces the polygon-batched build with that ring cap per batch (capped
+    at COVER_CELL_BUDGET, so every batch's cover fits the broadcast).
+
+    Plan: _overlap_core (lazy raw clip areas) -> localCheckpoint (the ONE
+    materialization) -> _finish_weightmap (A1 normalization).  A polygon
+    set whose cover fits the broadcast budget at no resolution is built in
+    contiguous polygon batches, one core + checkpoint per batch, so only
+    one batch's cover is broadcast at a time; the batches' raw tables are
+    normalized together (per-polygon normalization, so batching changes no
+    value).
     """
     from ..options import get_options
+    from ..session import free_local_checkpoint
     silent = get_options()["silent"]
     if len(polys) == 0:
-        raise NoOverlapError("No `ds` grid cells overlapped with any polygon in `gdf_in`. "
-                             "Check the input `ds` and `gdf_in`.")
+        raise NoOverlapError()
     if not silent:
         # status prints, reference wrappers.py:87-103 (suppressed via
         # set_options(silent=True))
         print("creating polygons for each pixel...")
     if not isinstance(grid, GridSpec):
         grid = grid.with_bounds()
-    dlat_max, _, dlon_max, _ = _grid_spacing(grid)
+    epsg = polys.pick_epsg()
+    batches = [(0, len(polys))]
     if _prep is None and res is None and (
             _batch_max_rings is not None
             or _cover_budget_unreachable(polys)):
         # ring-count-dominated polygon set: no resolution fits the cover
         # in the broadcast budget (see POLY_BATCH_MAX_RINGS) — build in
-        # polygon batches and union, instead of letting the coarsening
-        # loop bottom out at a few global cells (a pixels x polygons
-        # cartesian through the broadcast join).  _batch_max_rings forces
-        # the batched path with an explicit ring cap (oracle replays,
-        # callers that want bounded refine closures) WITHOUT mutating the
-        # module budgets — concurrency-safe, and the sub-builds run the
-        # normal path so no recursion is possible.
-        if raw_areas:
+        # polygon batches instead of letting the coarsening loop bottom
+        # out at a few global cells (a pixels x polygons cartesian through
+        # the broadcast join).  The CRS pick (J2) stays global, so a
+        # latitudinally-narrow batch cannot pick a different projection.
+        big = max(len(p) for p in polys.rings)
+        if big > COVER_CELL_BUDGET:
             raise ValueError(
-                f"pixel_overlaps: {len(polys)} polygons exceed the cover "
-                "budget at every resolution and raw_areas=True cannot be "
-                "batched here (the resumable build buckets by PIXELS) — "
-                f"batch the PolygonSet into <= ~{POLY_BATCH_MAX_RINGS}-"
-                "ring subsets upstream and resume each separately")
-        if len(polys) == 1 and _batch_max_rings is None:
-            # a SINGLE polygon with more rings than the budget cannot be
-            # split by batching — without this the batched builder would
-            # recurse into the same one-polygon set forever (an explicit
-            # _batch_max_rings is exempt: its sub-builds run the normal
-            # path, so a one-polygon "batch" cannot recurse)
-            raise ValueError(
-                "pixel_overlaps: a single polygon has more rings "
-                f"({sum(len(p) for p in polys.rings)}) than "
-                f"COVER_CELL_BUDGET={COVER_CELL_BUDGET} — no cell "
+                f"pixel_overlaps: a single polygon has more rings ({big}) "
+                f"than COVER_CELL_BUDGET={COVER_CELL_BUDGET} — no cell "
                 "resolution fits its cover in the broadcast budget and "
                 "batching cannot split one polygon; simplify or split "
                 "the geometry upstream")
-        return _pixel_overlaps_batched(
-            spark, grid, polys, weights_pdf=weights_pdf,
-            subset_bbox=subset_bbox, salt=salt, pixels=pixels,
-            pixels_have_weights=pixels_have_weights,
-            max_rings=_batch_max_rings)
-    if _prep is None:
-        _prep = _overlap_prep(spark, grid, polys, res=res)
-    res, df_cover = _prep
+        batches = _plan_poly_batches(polys, max_rings=min(
+            _batch_max_rings or POLY_BATCH_MAX_RINGS, COVER_CELL_BUDGET))
+        if not silent:
+            print(f"building overlaps in {len(batches)} polygon batches...")
 
-    if pixels is None:
-        # finer-than-core-count tasks: the candidate load per pixel range is
-        # geographically uneven (polygon-dense bands produce more refine
-        # work), so 4x parallelism partitions keep stragglers short
-        nparts = 4 * spark.sparkContext.defaultParallelism
-        pixels = pixel_geometry(spark, grid, weights_pdf=weights_pdf,
-                                num_partitions=nparts)
+    # finer-than-core-count tasks: the candidate load per pixel range is
+    # geographically uneven (polygon-dense bands produce more refine work),
+    # so 4x parallelism partitions keep stragglers short
+    pixels = pixel_geometry(spark, grid, weights_pdf=weights_pdf,
+                            num_partitions=4 * spark.sparkContext
+                            .defaultParallelism)
+    if not silent:
+        print("calculating overlaps between pixels and output polygons...")
+    blocks, n_boundary, n_nonconvex = [], 0, 0
+    try:
+        for lo, hi in batches:
+            sub = polys if (lo, hi) == (0, len(polys)) else PolygonSet(
+                polys.rings[lo:hi],
+                polys.attrs.iloc[lo:hi].drop(columns="poly_idx")
+                .reset_index(drop=True))
+            prep = _prep
+            if prep is None:
+                try:
+                    prep = _overlap_prep(spark, grid, sub, res=res)
+                except NoOverlapError:
+                    continue        # no cover cell: the batch has no rows
+            try:
+                raw, accs = _overlap_core(spark, grid, sub, pixels, prep,
+                                          epsg, subset_bbox=subset_bbox,
+                                          salt=salt)
+                if lo:              # batch-local -> global poly_idx (O2)
+                    raw = raw.withColumn(
+                        "poly_idx", (F.col("poly_idx") + F.lit(lo))
+                        .cast("long"))
+                # LOCAL CHECKPOINT: materializes the pixel/cover/refine
+                # pipeline once AND truncates lineage, so every later scan
+                # schedules bare block-read tasks (plain persist still
+                # deserializes the full lineage in each task closure —
+                # measured ~35 ms/task)
+                blocks.append(raw.localCheckpoint(eager=True))
+            finally:
+                if _prep is None:   # the cover this call built
+                    free_local_checkpoint(prep[1])
+            n_boundary += int(accs[0].value)
+            n_nonconvex += int(accs[1].value)
+    except BaseException:
+        # a failing later batch must not orphan the blocks already built
+        for block in blocks:
+            free_local_checkpoint(block)
+        raise
+    wm = _finish_weightmap(spark, blocks, polys, grid, epsg,
+                           n_boundary, n_nonconvex)
+    if not silent:
+        print("success!")
+    return wm
 
-    epsg = polys.pick_epsg() if _epsg is None else _epsg
+
+def _overlap_core(spark: SparkSession, grid, polys: PolygonSet,
+                  pixels: DataFrame, prep: tuple, epsg: int,
+                  subset_bbox: bool = True, salt: int = 0) -> tuple:
+    """The lazy overlap plan of ``pixels`` (pixel_geometry rows, with a
+    ``weight`` column when the weight is to be carried) against ``polys``:
+    returns (raw, (boundary_acc, nonconvex_acc)).  ``raw`` holds the
+    UN-normalized clip areas (poly_idx, pix_idx, lat, lon, area[, weight]);
+    nothing executes here, so the refine accumulators read 0 until the
+    caller has materialized ``raw``.  prep: (res, df_cover) from
+    _overlap_prep."""
+    res, df_cover = prep
+    dlat_max, _, dlon_max, _ = _grid_spacing(grid)
 
     # P2 bbox prefilter: pure predicate -> Catalyst pushes it into the scan.
     # Pad = half the (max) pixel extent per axis + the polygon edges' max
@@ -626,8 +654,6 @@ def pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
             (F.col("lat") >= lat_min - pad_lat) & (F.col("lat") <= lat_max + pad_lat) &
             (F.col("lon") >= lon_min - pad_lon) & (F.col("lon") <= lon_max + pad_lon))
 
-    if not silent:
-        print("calculating overlaps between pixels and output polygons...")
     # polygon cell cover (df_cover from _overlap_prep), dilated one ring —
     # guarantees center-cell assignment of pixels misses nothing given the
     # per-axis res cap.  Cell assignment by pixel-half center: unique,
@@ -644,7 +670,7 @@ def pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
     fields = [StructField("poly_idx", LongType()), StructField("pix_idx", LongType()),
               StructField("lat", DoubleType()), StructField("lon", DoubleType()),
               StructField("area", DoubleType())]
-    has_w = weights_pdf is not None or (pixels is not None and pixels_have_weights)
+    has_w = "weight" in pixels.columns
     if has_w:
         fields.append(StructField("weight", DoubleType()))
     schema = StructType(fields)
@@ -692,75 +718,62 @@ def pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
                         counters=(acc_boundary, acc_nonconvex)), schema)
     refined = full_part.unionByName(refined_edge)
 
-    # antimeridian halves add up; then window-normalize per polygon (A1)
-    aggs = [F.sum("area").alias("area")]
-    if has_w:
-        aggs.append(F.first("weight").alias("weight"))
-    # the (poly,pixel) area sum is only needed when antimeridian halves can
-    # exist — detected statically from the axis bounds (no extra Spark job)
+    # antimeridian halves add up: the (poly,pixel) area sum is only needed
+    # when halves can exist — detected statically from the axis bounds (no
+    # extra Spark job)
     if _grid_wraps(grid):
-        summed = refined.groupBy("poly_idx", "pix_idx", "lat", "lon").agg(*aggs)
-    else:
-        summed = refined
-    ckpt = None
-    if raw_areas:
-        # checkpoint/resume path: keep raw clip areas so partial results
-        # from different buckets can be normalized globally at stitch time.
-        # Fully LAZY (no persist/count): the caller writes the result to
-        # parquet, which is the single materialization — an empty bucket
-        # just writes an empty file (schema is static), no NoOverlapError.
-        overlaps = summed
-        n_rows = None
-    else:
-        # A1 normalization WITHOUT a window: a window partitioned by
-        # poly_idx would put a domain-scale polygon's millions of rows in
-        # one partition.  ONE materialization pass total (r3 — the old
-        # persist-during-totals + checkpoint-of-the-join shape wrote the
-        # 3.8M-row bench table twice, ~2s of the build):
-        #   1. LOCAL CHECKPOINT the raw-area table — materializes the
-        #      decode/cover/refine pipeline once AND truncates lineage, so
-        #      every later scan schedules bare block-read tasks (plain
-        #      persist still deserializes the full lineage in each task
-        #      closure — measured ~35 ms/task).
-        #   2. per-polygon totals are <= n_poly rows (the PolygonSet is
-        #      driver-resident by construction), so collect them and
-        #      normalize through a LOCAL-relation broadcast join: the
-        #      broadcast costs no Spark job per scan, and rel_area is a
-        #      cheap JVM project over the checkpoint blocks.
-        ckpt = summed.localCheckpoint(eager=True)
-        tot = ckpt.groupBy("poly_idx").agg(
+        aggs = [F.sum("area").alias("area")]
+        if has_w:
+            aggs.append(F.first("weight").alias("weight"))
+        refined = refined.groupBy("poly_idx", "pix_idx", "lat", "lon") \
+            .agg(*aggs)
+    return refined, (acc_boundary, acc_nonconvex)
+
+
+def _finish_weightmap(spark: SparkSession, blocks: list, polys: PolygonSet,
+                      grid, epsg: int, n_boundary: int,
+                      n_nonconvex: int) -> WeightMap:
+    """The A1 normalization every build path ends in (rel_area sums to 1
+    over each polygon's overlapping pixels, reference core.py:521): the
+    WeightMap over the MATERIALIZED raw-area tables ``blocks`` (their
+    union), which it owns from here on — they are freed if it raises.
+    NoOverlapError when they hold no row.
+
+    No window: a window partitioned by poly_idx would put a domain-scale
+    polygon's millions of rows in one partition.  The per-polygon totals
+    are <= n_poly rows (the PolygonSet is driver-resident by
+    construction), so they are collected and joined back as a
+    LOCAL-relation broadcast: the broadcast costs no Spark job per scan,
+    and rel_area is a cheap JVM project over the blocks."""
+    from ..session import free_local_checkpoint
+    try:
+        if not blocks:
+            raise NoOverlapError()
+        raw = blocks[0]
+        for block in blocks[1:]:
+            raw = raw.unionByName(block)
+        tot = raw.groupBy("poly_idx").agg(
             F.sum("area").alias("_tot"),
             F.count(F.lit(1)).alias("_n")).toPandas()
+        # count carried on the WeightMap so downstream join-strategy
+        # decisions never re-execute the overlap DAG
         n_rows = int(tot["_n"].sum())
         if n_rows == 0:
-            raise NoOverlapError(
-                "No `ds` grid cells overlapped with any polygon in `gdf_in`. "
-                "Check the input `ds` and `gdf_in`.")
-        overlaps = (ckpt.join(F.broadcast(
-                        spark.createDataFrame(tot[["poly_idx", "_tot"]])),
-                        "poly_idx")
-                        .withColumn("rel_area", F.col("area") / F.col("_tot"))
-                        .drop("area", "_tot"))
-
-    # count carried on the WeightMap so downstream join-strategy decisions
-    # never re-execute the overlap DAG (None on the lazy raw_areas path)
-    if n_rows == 0:
-        raise NoOverlapError("No `ds` grid cells overlapped with any polygon in `gdf_in`. "
-                             "Check the input `ds` and `gdf_in`.")
-    # on the lazy raw_areas path NOTHING has executed yet, so the
-    # accumulators read 0 here — hand them to the caller (_accs) to read
-    # after materialization instead of recording vacuous zeros
-    n_boundary, n_nonconvex = int(acc_boundary.value), int(acc_nonconvex.value)
-    if not raw_areas:
-        _warn_nonconvex_fallback(n_boundary, n_nonconvex)
-    if not silent:
-        print("success!")
+            raise NoOverlapError()
+    except BaseException:
+        for block in blocks:
+            free_local_checkpoint(block)
+        raise
+    overlaps = (raw.join(F.broadcast(
+                    spark.createDataFrame(tot[["poly_idx", "_tot"]])),
+                    "poly_idx")
+                   .withColumn("rel_area", F.col("area") / F.col("_tot"))
+                   .drop("area", "_tot"))
+    _warn_nonconvex_fallback(n_boundary, n_nonconvex)
     return WeightMap(overlaps=overlaps, polys=polys, grid=grid, epsg=epsg,
-                     has_weights=has_w, n_rows=n_rows,
+                     has_weights="weight" in raw.columns, n_rows=n_rows,
                      n_boundary_refined=n_boundary,
-                     n_nonconvex_fallback=n_nonconvex,
-                     _ckpt=ckpt if ckpt is not None else overlaps,
-                     _accs=(acc_boundary, acc_nonconvex) if raw_areas else None)
+                     n_nonconvex_fallback=n_nonconvex, _blocks=blocks)
 
 
 def _cover_budget_unreachable(polys) -> bool:
@@ -790,74 +803,6 @@ def _plan_poly_batches(polys, max_rings: int | None = None) -> list:
         rings += nr
     batches.append((lo, len(polys.rings)))
     return batches
-
-
-def _pixel_overlaps_batched(spark: SparkSession, grid, polys: PolygonSet,
-                            weights_pdf: pd.DataFrame | None,
-                            subset_bbox: bool, salt: int,
-                            pixels: DataFrame | None,
-                            pixels_have_weights: bool,
-                            max_rings: int | None = None) -> WeightMap:
-    """pixel_overlaps for ring-count-dominated polygon sets (800k+ rings,
-    where no cell resolution fits the cover in the broadcast budget):
-    build per contiguous polygon batch — each batch gets its own
-    capture-safe cover, broadcast join, and refine closure (bounding BOTH
-    the broadcast size and the ring dict shipped to executors) — then
-    union.  Normalization (A1) is per-polygon, so batch-local rel_area
-    equals the unbatched result exactly; the global CRS pick (J2) is
-    pinned via _epsg so a latitudinally-narrow batch cannot pick a
-    different projection than the whole set would.  A batch with zero
-    overlap contributes no rows (J3's outer merge still yields NaN for
-    its polygons); NoOverlapError is raised only when EVERY batch is
-    empty, matching the unbatched contract."""
-    from ..options import get_options
-    epsg = polys.pick_epsg()
-    batches = _plan_poly_batches(polys, max_rings=max_rings)
-    if not get_options()["silent"]:
-        print(f"building overlaps in {len(batches)} polygon batches...")
-    parts, ckpts = [], []
-    n_rows = n_boundary = n_nonconvex = 0
-    has_w = weights_pdf is not None or (pixels is not None
-                                        and pixels_have_weights)
-    try:
-        for lo, hi in batches:
-            sub = PolygonSet([polys.rings[i] for i in range(lo, hi)],
-                             polys.attrs.iloc[lo:hi].drop(columns="poly_idx")
-                             .reset_index(drop=True))
-            try:
-                wm = pixel_overlaps(spark, grid, sub,
-                                    weights_pdf=weights_pdf,
-                                    subset_bbox=subset_bbox, salt=salt,
-                                    pixels=pixels,
-                                    pixels_have_weights=pixels_have_weights,
-                                    _epsg=epsg)
-            except NoOverlapError:
-                continue
-            parts.append(wm.overlaps.withColumn(
-                "poly_idx", (F.col("poly_idx") + F.lit(lo)).cast("long")))
-            ckpts.append(wm._ckpt if wm._ckpt is not None else wm.overlaps)
-            n_rows += wm.n_rows
-            n_boundary += wm.n_boundary_refined
-            n_nonconvex += wm.n_nonconvex_fallback
-    except BaseException:
-        # a failing later batch must not orphan the checkpointed blocks
-        # of the batches already built (no WeightMap handle escapes here)
-        from ..session import free_local_checkpoint
-        for c in ckpts:
-            free_local_checkpoint(c)
-        raise
-    if not parts:
-        raise NoOverlapError(
-            "No `ds` grid cells overlapped with any polygon in `gdf_in`. "
-            "Check the input `ds` and `gdf_in`.")
-    overlaps = parts[0]
-    for p in parts[1:]:
-        overlaps = overlaps.unionByName(p)
-    return WeightMap(overlaps=overlaps, polys=polys, grid=grid, epsg=epsg,
-                     has_weights=has_w, n_rows=n_rows,
-                     n_boundary_refined=n_boundary,
-                     n_nonconvex_fallback=n_nonconvex,
-                     _ckpts=ckpts)
 
 
 # ---------------------------------------------------------------------------

@@ -34,7 +34,7 @@ import warnings
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 DOC_SCHEMA = "doc_id long, text string"
 OUT_SCHEMA = "doc_id long, digest string, grp int"
