@@ -228,3 +228,26 @@ def test_jpeg_tiles_end_to_end(spark):
         generate_spark(spark, grid, ntime=2, fmt="raw32"), grid), wm) \
         .orderBy("t").toPandas()
     np.testing.assert_allclose(a["value"], b["value"], rtol=0, atol=0.05)
+
+
+def test_boundary_refined_counts_overlap_rows(spark):
+    """n_boundary_refined counts the overlap rows the boundary clip
+    produced, not the candidates sent through it: the dilated-ring
+    candidates whose overlap comes out empty are dropped and not counted,
+    so on a grid without antimeridian halves it never exceeds n_rows.
+    The non-convex fallback count is of the same rows."""
+    # a south-polar quad next to the pole: most candidates are boundary
+    # ones and many clip to nothing (the candidate count was 1714 for
+    # 1420 rows)
+    ring = np.array([[-25.0, -89.0], [25.0, -88.0], [20.0, -80.0],
+                     [-20.0, -81.0]])
+    polys = PolygonSet([ring], pd.DataFrame({"name": ["south"]}))
+    grid = GridSpec(lat_edge=-90.0, lon_edge=-30.0, dlat=0.5, dlon=0.5,
+                    nlat=60, nlon=120, tile_h=30, tile_w=60)
+    wm = pixel_overlaps(spark, grid, polys)
+    try:
+        assert wm.epsg == _ell.EPSG_SOUTH
+        assert 0 < wm.n_boundary_refined <= wm.n_rows
+        assert wm.n_nonconvex_fallback <= wm.n_boundary_refined
+    finally:
+        wm.unpersist()

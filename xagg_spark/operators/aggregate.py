@@ -1,7 +1,14 @@
-"""aggregate: NaN-renormalizing weighted mean over the overlap table.
+"""aggregate: the zonal family — weighted mean, weighted quantiles and
+weighted summary statistics per (polygon, *dims) over the overlap table.
 
-Reproduces the reference's default ``impl='for_loop'`` semantics
-(/root/reference/xagg/core.py:776-827, normalize at auxfuncs.py:10-53):
+Data model: the fact table holds one row per (pix_idx, *dims), as in the
+reference cube (one stacked loc per pixel, each carrying a possibly NaN
+value at every non-loc coordinate).  Duplicate fact rows are not merged:
+every path adds them as separate terms.
+
+The weighted mean reproduces the reference's default ``impl='for_loop'``
+semantics (reference xagg/core.py:776-827, normalize at
+auxfuncs.py:10-53):
 
   w_p(pix)  = rel_area(pix) * add_weight(pix)
   valid(pix) = NOT all-NaN(value[pix, over all non-loc dims])   # one mask
@@ -13,28 +20,33 @@ Reproduces the reference's default ``impl='for_loop'`` semantics
               is NaN (xarray .sum(skipna=True) of all-NaN -> 0.0)
   agg       = NaN when the polygon has no overlap or no valid pixels
 
-Physical plan (byte-traffic-minimal form):
+Physical plan, one shape for every entry point: ONE fact ⨝ overlaps join
+on pix_idx (`_weighted_fact_join`) feeds a per-(poly_idx, *dims) reduce,
+whose output gets exactly ONE localCheckpoint (`_materialize`, which also
+logs the call's DEBUG decision record, `extra={"aggregate": rec}`); the
+finishing steps are lazy, tiny operations on it and `_merge_attrs`
+outer-merges the result onto the polygon attrs.
 
-  ONE fact ⨝ overlaps equi-join on pix_idx (broadcast when the weightmap
-  fits, so the fact table never shuffles) feeding the numerator aggregate,
-  which simultaneously OBSERVES the joined row count and the non-finite
-  value count (accumulators, zero extra passes).  When the observation
-  proves the data dense and all-finite — joined rows == overlap_rows x
-  |dims-space| and zero NaN/NULL values, both exact integers — the
-  for_loop denominators collapse to per-polygon weight sums over the
-  overlap table alone (r6 adaptive fast path: no second pass over the
-  join, no per-pixel validity table).  Otherwise the general per-pixel
-  validity aggregate runs over the join.  Everything after is tiny
-  broadcast joins.
-
-All-variable aggregation happens in a single pass (reference loops vars but
-reuses the weightmap, core.py:718-721).
+Dense certificate (for_loop): if each (poly_idx, *dims) group holds every
+overlap pixel of its polygon once, all finite, every pixel is valid and
+the denominators are the polygon's overlap weight sum — no second,
+per-pixel validity aggregate over the join.  The numerator reduce proves
+it per group: its finite-row count and long sum of 32-bit hash(pix_idx)
+must equal the polygon's overlap row count and hash-sum (collected
+beforehand, <= n_poly rows; exact, no overflow below 2^32 rows a group),
+mismatches counted by an Observation in the same job.  One blind spot:
+within one group, duplicated and missing pixels with an equal count and
+an equal hash-sum pass as dense.
 """
 
 from __future__ import annotations
 
+import logging
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
+
+_log = logging.getLogger(__name__)
 
 
 def _nan():
@@ -45,16 +57,12 @@ def _finite(c):
     return ~F.isnan(c) & c.isNotNull()
 
 
-# auto-broadcast threshold for the overlap side: when the weightmap fits a
-# broadcast, the (usually vastly larger) fact table never shuffles and the
-# final aggregate is map-side partial + a tiny reduce.  5M rows ~= 250 MB
-# hash relation (5 numeric cols) — comfortably broadcastable, and on a real
-# cluster shipping 250 MB to each executor beats shuffling a multi-TB fact
-# table by orders of magnitude.  Re-measured at 3.8M rows on local[32] with
-# the weightmap persisted: broadcast 5.3s vs shuffle join 13.5s.  Weightmaps
-# above the threshold (continental 0.01-degree grids) take the shuffle join;
-# co-partitioning both sides on pix_idx at write time removes that exchange
-# too (io.tables bucketing).
+# auto-broadcast threshold for the overlap side: below it the (usually vastly
+# larger) fact table never shuffles.  5M rows ~= 250 MB hash relation — on a
+# cluster, shipping that to each executor beats shuffling a multi-TB fact
+# table (3.8M rows on local[32]: broadcast 5.3s vs shuffle join 13.5s).
+# Larger weightmaps (continental 0.01-degree grids) take the shuffle join,
+# or no exchange at all when co-partitioned on pix_idx (io.tables).
 BROADCAST_OVERLAPS_MAX_ROWS = 5_000_000
 
 
@@ -62,22 +70,15 @@ def _fact_overlaps_join(pix_values: DataFrame, ov: DataFrame,
                         broadcast_overlaps: bool, bucketed: bool) -> DataFrame:
     """The engine's one big join, strategy by input shape:
 
-    - broadcast: the (small) overlap side ships to every task; the fact
-      table never shuffles;
-    - bucketed co-partitioned tables (read_copartitioned sets
-      WeightMap.bucketed): NO hint — the sorted buckets merge-stream
-      exchange-free, which is the design.  A SHUFFLE_HASH hint here WOULD
-      be honored by Catalyst (verified: it flips the exchange-free
-      sorted-bucket SortMergeJoin to an exchange-free ShuffledHashJoin),
-      hash-building an entire overlap bucket (n_rows/n_buckets rows) in
-      memory per task — exactly the pressure bucketing exists to avoid —
-      and with n_rows=None it would also pin the strategy against AQE's
-      broadcast conversion;
-    - otherwise the join genuinely shuffles: SHUFFLE_HASH with the
-      overlap side as build skips both SortMergeJoin sort passes
-      (measured at the 4x bench, 23M x 15M rows: aggregate min-of-3
-      20.1s -> 6.4s).  SHJ spills since Spark 3.1, and AQE skew
-      splitting stays active on the exchange."""
+    - broadcast: the (small) overlap side ships to every task;
+    - bucketed co-partitioned tables (WeightMap.bucketed): NO hint — the
+      sorted buckets merge-stream exchange-free.  Catalyst would honor a
+      SHUFFLE_HASH hint here, hash-building a whole overlap bucket per
+      task (the pressure bucketing avoids) and, with n_rows=None, pinning
+      the strategy against AQE's broadcast conversion;
+    - otherwise the join shuffles: SHUFFLE_HASH with the overlap side as
+      build skips both SortMergeJoin sorts (4x bench, 23M x 15M rows:
+      min-of-3 20.1s -> 6.4s); SHJ spills, AQE skew splitting stays on."""
     if broadcast_overlaps:
         return pix_values.join(F.broadcast(ov), "pix_idx")
     if bucketed:
@@ -90,7 +91,8 @@ def aggregate(pix_values: DataFrame, wm, dims=("var", "t"),
               broadcast_overlaps: bool | None = None,
               impl: str | None = None,
               silent: bool | None = None) -> DataFrame:
-    """pix_values: long DataFrame (pix_idx, *dims, value).  wm: WeightMap.
+    """pix_values: long DataFrame (pix_idx, *dims, value), one row per
+    (pix_idx, *dims) as in the reference cube.  wm: WeightMap.
 
     Returns tidy long result: (poly_idx, *attrs, *dims, value).  `var` in
     dims plays the reference's per-variable loop; `t`/`plev`/... are the
@@ -100,7 +102,11 @@ def aggregate(pix_values: DataFrame, wm, dims=("var", "t"),
     impl='for_loop' (default): the reference's default NaN semantics — ONE
     validity mask per pixel (valid iff any finite value across the non-loc
     dims); NaN terms drop from the numerator only
-    (/root/reference/xagg/core.py:776-827).
+    (reference xagg/core.py:776-827).  Dense path when the per-group
+    fingerprint proves every group holds its polygon's overlap pixels once,
+    all finite (blind spot: duplicated and missing pixels of one group with
+    equal count and hash-sum), the general path otherwise; both add
+    duplicate rows as separate terms.
 
     impl='dot_product': the reference's dot-product semantics — weights are
     masked PER (pixel, dim-coordinate) and renormalized per coordinate
@@ -125,21 +131,19 @@ def aggregate(pix_values: DataFrame, wm, dims=("var", "t"),
     pix_values, dims = _promote_var(pix_values, dims)
     if not silent:
         print(f"aggregating variables (impl={impl})...")
-    dims = list(dims)
-    has_var = "var" in dims
-    vkeys = ["var"] if has_var else []
-    v = F.col(value_col)
-    joined = _weighted_fact_join(pix_values, wm, broadcast_overlaps)
+    vkeys = ["var"] if "var" in dims else []
+    v, w = F.col(value_col), F.col("_w")
+    joined, join = _weighted_fact_join(pix_values, wm, broadcast_overlaps)
 
     if impl == "dot_product":
         # per-(pixel, dim-coordinate) weight masking: numerator AND
         # denominator from ONE hash aggregate over the joined tree
-        res = (joined.groupBy("poly_idx", *dims)
-                     .agg(F.sum(F.when(_finite(v), v * F.col("_w"))).alias("_s"),
-                          F.sum(F.when(_finite(v), F.col("_w"))).alias("_d")))
-        from pyspark.sql import Window
-        w_var = Window.partitionBy(*vkeys) if vkeys else \
-            Window.partitionBy(F.lit(1))
+        res, _ = _materialize(
+            joined.groupBy("poly_idx", *dims)
+                  .agg(F.sum(F.when(_finite(v), v * w)).alias("_s"),
+                       F.sum(F.when(_finite(v), w)).alias("_d")),
+            "aggregate", join, impl)
+        w_var = Window.partitionBy(*(vkeys or [F.lit(1)]))
         # _dmax == 0 over the whole variable <=> every value NaN -> NaN
         # (this window runs on the tiny polys x dims result, not the fact)
         res = (res.withColumn("_dmax", F.max("_d").over(w_var))
@@ -149,88 +153,93 @@ def aggregate(pix_values: DataFrame, wm, dims=("var", "t"),
                        .when(F.coalesce(F.col("_d"), F.lit(0.0)) == 0.0, F.lit(0.0))
                        .otherwise(F.col("_s") / F.col("_d")))
                   .select("poly_idx", *dims, value_col))
-        return _merge_attrs(res, pix_values.sparkSession, wm, dims, value_col)
+        return _merge_attrs(res, wm, dims, value_col)
 
-    # numerators in ONE pass over the joined tree, with an Observation
-    # counting the joined rows and the non-finite values DURING the same
-    # job (accumulator-based — no extra pass).  The checkpointed result is
-    # tiny (one row per poly x dims).
-    from pyspark.sql import Observation
-    obs = Observation()
-    res = (joined.observe(obs,
-                          F.count(F.lit(1)).alias("_rows"),
-                          F.sum(F.when(~_finite(v), 1).otherwise(0))
-                           .alias("_bad"))
-                 .groupBy("poly_idx", *dims)
-                 .agg(F.sum(F.when(_finite(v), v * F.col("_w"))).alias("_s"))
-                 .localCheckpoint(eager=True))
-    m = obs.get
-    n_ov = getattr(wm, "n_rows", None)
-    n_combos = (res.select(*dims).distinct().count() if dims else 1)
-    # DENSE + all-finite fast path: when every value is finite AND the
-    # joined row count equals overlap_rows x |dims-space| (every overlap
-    # pixel carries the full dims cross product — the reference's stacked
-    # layout, and the common clean-data case), every pixel is VALID for
-    # every var by construction, so the for_loop denominators (core.py:812)
-    # collapse to per-polygon weight sums over the OVERLAP table alone —
-    # no second pass over the fact join, no per-pixel validity table.
-    # Both conditions are exact integers observed from this very job;
-    # anything else (NaNs, missing tiles, bbox-subset facts, unknown
-    # n_rows) takes the general per-pixel path below.
-    if (n_ov is not None and int(m["_bad"] or 0) == 0
-            and int(m["_rows"] or 0) == n_ov * n_combos):
-        denom = (_ov_weighted(wm)
-                 .groupBy("poly_idx")
-                 .agg(F.sum("_w").alias("_denom"),
-                      F.count(F.lit(1)).alias("_n_valid")))
-        if vkeys:
-            denom = denom.crossJoin(res.select(*vkeys).distinct())
-    else:
-        # general path (for_loop NaN semantics, core.py:812 + normalize
-        # drop_na, auxfuncs.py:10-53): a pixel is VALID for (poly[, var])
-        # iff it has >= 1 finite value across the non-loc dims; denom =
-        # sum of _w over valid pixels — a second two-level aggregate over
-        # the join.  Pixels absent from the fact table are treated as
-        # all-NaN (excluded), matching the reference where every stacked
-        # loc carries (possibly NaN) values.
+    # numerators plus the per-group fingerprint (finite-row count and
+    # hash-sum) in ONE pass over the joined tree, checked against the
+    # per-polygon table inside the same job
+    fin = _finite(v)
+    h = F.hash("pix_idx").cast("long")
+    per_poly = _collected(
+        _ov_weighted(wm).groupBy("poly_idx")
+                        .agg(F.sum("_w").alias("_denom"),
+                             F.count(F.lit(1)).alias("_n_valid"),
+                             F.sum(h).alias("_h")))
+    res, dense = _materialize(
+        joined.groupBy("poly_idx", *dims)
+              .agg(F.sum(F.when(fin, v * w)).alias("_s"),
+                   F.count(F.when(fin, 1)).alias("_c"),
+                   F.sum(F.when(fin, h)).alias("_hc"))
+              .join(F.broadcast(per_poly), "poly_idx"),
+        "aggregate", join, impl,
+        mismatch=((F.col("_c") != F.col("_n_valid"))
+                  | ~F.col("_hc").eqNullSafe(F.col("_h"))))
+    if not dense:
+        # general path (core.py:812 + normalize drop_na, auxfuncs.py:10-53):
+        # a pixel is VALID for (poly[, var]) iff it has >= 1 finite value
+        # across the non-loc dims; denom = sum of _w over valid pixels, a
+        # second two-level aggregate over the join.  A pixel absent from the
+        # fact table counts as all-NaN (the reference cube has every loc).
         level1 = (joined.groupBy("poly_idx", "pix_idx", *vkeys)
                         .agg(F.first("_w").alias("_w"),
-                             F.max(F.when(_finite(v), 1).otherwise(0))
-                              .alias("_af")))
-        denom = (level1.filter(F.col("_af") == 1)
-                       .groupBy("poly_idx", *vkeys)
-                       .agg(F.sum("_w").alias("_denom"),
-                            F.count(F.lit(1)).alias("_n_valid")))
+                             F.max(F.when(fin, 1).otherwise(0)).alias("_af")))
+        denom = _collected(level1.filter(F.col("_af") == 1)
+                                 .groupBy("poly_idx", *vkeys)
+                                 .agg(F.sum("_w").alias("_denom"),
+                                      F.count(F.lit(1)).alias("_n_valid")))
+        res = (res.drop("_denom", "_n_valid")
+                  .join(F.broadcast(denom), ["poly_idx"] + vkeys, "left"))
 
     # NaN result when no valid pixels; 0.0 when valid pixels exist but
     # every term at this dim was NaN or denom == 0 (xarray skipna sum)
-    res = (res.join(F.broadcast(denom), ["poly_idx"] + vkeys, "left")
-              .withColumn(
-                  value_col,
-                  F.when(F.coalesce(F.col("_n_valid"), F.lit(0)) == 0, _nan())
-                   .when(F.col("_denom") == 0.0, F.lit(0.0))
-                   .otherwise(F.coalesce(F.col("_s") / F.col("_denom"),
-                                         F.lit(0.0))))
+    res = (res.withColumn(
+                value_col,
+                F.when(F.coalesce(F.col("_n_valid"), F.lit(0)) == 0, _nan())
+                 .when(F.col("_denom") == 0.0, F.lit(0.0))
+                 .otherwise(F.coalesce(F.col("_s") / F.col("_denom"),
+                                       F.lit(0.0))))
               .select("poly_idx", *dims, value_col))
+    return _merge_attrs(res, wm, dims, value_col)
 
-    return _merge_attrs(res, pix_values.sparkSession, wm, dims, value_col)
+
+def _collected(df: DataFrame) -> DataFrame:
+    """A tiny frame (<= n_poly x n_var rows) collected to the driver and
+    rebuilt as a local relation: it broadcasts with no Spark job per scan,
+    so the finishing steps stay lazy over the one checkpoint."""
+    return df.sparkSession.createDataFrame(df.toPandas(), df.schema)
 
 
-def _merge_attrs(res: DataFrame, spark, wm, dims, value_col) -> DataFrame:
+def _materialize(reduced: DataFrame, op: str, join: str, impl=None,
+                 mismatch=None) -> tuple:
+    """The one materialization of a zonal call: localCheckpoint the
+    per-group reduce (tiny: one row per group), observing in that same
+    job its row count and — given the for_loop fingerprint test
+    `mismatch` — the groups failing it; log the call's decision record.
+    Returns (checkpoint, dense): dense is None without a `mismatch`.
+    localCheckpoint truncates lineage, so the finishing steps and both
+    branches of the attr merge read bare blocks, never the fact join."""
+    obs = Observation()
+    metrics = [F.count(F.lit(1)).alias("groups")]
+    if mismatch is not None:
+        metrics.append(F.sum(F.when(mismatch, 1).otherwise(0))
+                        .alias("mismatched"))
+    out = reduced.observe(obs, *metrics).localCheckpoint(eager=True)
+    rec = {"op": op, "impl": impl, "join": join, "mismatched": None,
+           **{k: int(x or 0) for k, x in obs.get.items()}}
+    rec["dense"] = None if mismatch is None else rec["mismatched"] == 0
+    _log.debug("zonal call %s", rec, extra={"aggregate": rec})
+    return out, rec["dense"]
+
+
+def _merge_attrs(res: DataFrame, wm, dims, value_col) -> DataFrame:
     """Outer merge onto polygon attrs (reference J3, core.py:533-538): keep
     zero-overlap polygons with NaN values for every dim combination.
-    dim_space comes from the (tiny) result, not another fact-table scan.
-    value_col: one column name or a list (multi-stat results) — every
-    listed DOUBLE column gets the NaN fill; other types keep NULL."""
+    dim_space comes from `res` itself (a lazy, tiny step over the call's
+    checkpoint), not another fact-table scan.  value_col: one column name
+    or a list (multi-stat results) — every listed DOUBLE column gets the
+    NaN fill; other types keep NULL."""
     value_cols = [value_col] if isinstance(value_col, str) else list(value_col)
-    attrs = spark.createDataFrame(wm.polys.attrs)
-    # materialize the (tiny: polys x dims) result ONCE before it fans out
-    # into the dim-space branch and the final join — otherwise the two
-    # branches race ahead of the cache and the whole fact-join pipeline
-    # runs twice.  localCheckpoint (not persist) also truncates lineage, so
-    # the merge below schedules bare block-read tasks instead of dragging
-    # the full decode/join closure into every task.
-    res = res.localCheckpoint(eager=True)
+    attrs = res.sparkSession.createDataFrame(wm.polys.attrs)
     dim_space = res.select(*dims).distinct()
     full = F.broadcast(attrs).crossJoin(F.broadcast(dim_space))
     out = full.join(res, on=["poly_idx"] + list(dims), how="left")
@@ -247,7 +256,9 @@ def aggregate_quantile(pix_values: DataFrame, wm, q: float = 0.5,
                        broadcast_overlaps: bool | None = None) -> DataFrame:
     """Exact weighted q-quantile per (polygon, *dims) — the zonal-statistic
     extension beyond the reference's weighted mean (same weight model:
-    w = rel_area * add_weight, reference core.py:716-775).
+    w = rel_area * add_weight, reference core.py:716-775).  The one-q case
+    of `aggregate_quantiles`, without its `q` column; so, as there, a dim
+    or `value_col` named `q` raises ValueError.
 
     Definition (lower weighted quantile, no interpolation, engine-portable):
     sort the polygon's finite pixel values ascending (ties broken by
@@ -256,38 +267,20 @@ def aggregate_quantile(pix_values: DataFrame, wm, q: float = 0.5,
     the partition — i.e. the SAME left-to-right accumulation that produced
     cw — so the threshold comparison is internally consistent whatever
     floating-point association an engine uses for its windowed sums.
-    A flip between engines would need q*total to land within accumulated
-    rounding error (~1e-12 relative) of a cw step (one pixel weight, ~1e-3
-    of total for realistic polygons) — ruled out in practice and pinned by
-    the driver oracle.
+    A flip between engines would need q*total within rounding error (~1e-12
+    relative) of a cw step (one pixel weight) — pinned by the driver oracle.
 
     NaN semantics: non-finite values are dropped before ranking (skipna);
     a (polygon, dims) group with no finite value — and any zero-overlap
     polygon — comes back NaN via the attr outer-merge (reference J3).
-
-    Physical plan: the same single fact ⨝ overlaps join as `aggregate`
-    (broadcast / bucketed / SHUFFLE_HASH by input shape), then ONE window
-    Exchange+Sort on (poly_idx, *dims) with both window functions and the
-    final min-aggregate riding the same sort — no second shuffle.  At
-    100 TB the partition size is one polygon's pixel count; a continental
-    polygon that overflows a task calls for the percentile_approx sketch
-    instead, not this exact path.
     """
-    if not (0.0 < q <= 1.0):
-        raise ValueError(f"q must be in (0, 1], got {q!r}")
-    pix_values, dims = _promote_var(pix_values, dims)
-    ranked = _ranked_by_weight(pix_values, wm, dims, value_col,
-                               broadcast_overlaps)
-    v = F.col(value_col)
-    res = (ranked.groupBy("poly_idx", *dims)
-                 .agg(F.min(F.when(F.col("_cw") >= F.lit(float(q)) * F.col("_tw"), v))
-                       .alias(value_col)))
-    return _merge_attrs(res, pix_values.sparkSession, wm, dims, value_col)
+    return aggregate_quantiles(pix_values, wm, [q], dims, value_col,
+                               broadcast_overlaps).drop("q")
 
 
 def _ov_weighted(wm) -> DataFrame:
     """Overlap side with the weight column `_w` = rel_area * add_weight —
-    shared by the fact join head and the dense-path denominators."""
+    shared by the fact join head and the per-polygon certificate table."""
     over = wm.overlaps
     if not wm.has_weights:
         over = over.withColumn("weight", F.lit(1.0))
@@ -296,21 +289,24 @@ def _ov_weighted(wm) -> DataFrame:
 
 
 def _weighted_fact_join(pix_values: DataFrame, wm,
-                        broadcast_overlaps: bool | None) -> DataFrame:
+                        broadcast_overlaps: bool | None) -> tuple:
     """The shared head of every zonal-stat entry point: weight column
     `_w` = rel_area * add_weight, then fact ⨝ overlaps on pix_idx via
-    `_fact_overlaps_join` (broadcast / bucketed / SHUFFLE_HASH by input
-    shape).  The broadcast decision uses the row count CARRIED on the
-    WeightMap (pixel_overlaps/read_wm set it) — never an eager count()
-    here, which would re-execute the whole overlap DAG when the caller
-    did not persist it."""
+    `_fact_overlaps_join`.  Returns (joined, strategy name) — 'broadcast',
+    'bucketed' or 'shuffle_hash'.  The broadcast decision uses the row
+    count CARRIED on the WeightMap (pixel_overlaps/read_wm set it) — never
+    an eager count() here, which would re-execute the whole overlap DAG
+    when the caller did not persist it."""
     ov = _ov_weighted(wm)
     if broadcast_overlaps is None:
         n_rows = getattr(wm, "n_rows", None)
         broadcast_overlaps = (n_rows is not None
                               and n_rows <= BROADCAST_OVERLAPS_MAX_ROWS)
-    return _fact_overlaps_join(pix_values, ov, broadcast_overlaps,
-                               getattr(wm, "bucketed", False))
+    bucketed = getattr(wm, "bucketed", False)
+    join = ("broadcast" if broadcast_overlaps else
+            "bucketed" if bucketed else "shuffle_hash")
+    return (_fact_overlaps_join(pix_values, ov, broadcast_overlaps, bucketed),
+            join)
 
 
 def _promote_var(pix_values: DataFrame, dims) -> tuple:
@@ -327,32 +323,23 @@ def _promote_var(pix_values: DataFrame, dims) -> tuple:
     return pix_values, dims
 
 
-def _ranked_by_weight(pix_values: DataFrame, wm, dims, value_col: str,
-                      broadcast_overlaps: bool | None) -> DataFrame:
-    """Shared quantile machinery: fact ⨝ overlaps (strategy by input
-    shape), finite filter, running weight sum `_cw` over (value, pix_idx)
-    asc within (poly_idx, *dims), and the partition total `_tw` = max of
-    the SAME accumulation — one window Exchange+Sort carries everything."""
-    from pyspark.sql import Window
-    joined = _weighted_fact_join(pix_values, wm, broadcast_overlaps)
-    v = F.col(value_col)
-    finite = joined.filter(_finite(v))
-    w_run = (Window.partitionBy("poly_idx", *dims)
-                   .orderBy(v.asc(), F.col("pix_idx").asc())
-                   .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    w_all = Window.partitionBy("poly_idx", *dims)
-    return (finite.withColumn("_cw", F.sum("_w").over(w_run))
-                  .withColumn("_tw", F.max(F.col("_cw")).over(w_all)))
-
-
 def aggregate_quantiles(pix_values: DataFrame, wm, qs,
                         dims=("var", "t"), value_col: str = "value",
                         broadcast_overlaps: bool | None = None) -> DataFrame:
-    """Several exact weighted quantiles in ONE pass: same single window
-    Exchange+Sort as `aggregate_quantile`, with one conditional-min
-    aggregate column per requested q, stacked to long form afterwards
-    (the stack runs on the tiny polys x dims result, not the fact).
-    Returns (poly_idx, *attrs, *dims, q, value) — one row per quantile.
+    """Several exact weighted quantiles (definition: `aggregate_quantile`)
+    in ONE pass.  Returns (poly_idx, *attrs, *dims, q, value) — one row
+    per quantile.
+
+    Physical plan: the shared fact ⨝ overlaps join, a finite filter, then
+    ONE window Exchange+Sort on (poly_idx, *dims) carrying the running
+    weight sum `_cw` over (value, pix_idx) asc and the partition total
+    `_tw` = max of the SAME accumulation; one conditional-min aggregate
+    column per requested q rides the same sort — no second shuffle.  The
+    stack to long form runs on the tiny per-group rows before their
+    checkpoint (melted after it, the merge cost one more job).  At 100 TB
+    the partition size is one polygon's pixel count; a continental polygon
+    that overflows a task calls for the percentile_approx sketch instead,
+    not this exact path.
     """
     qs = [float(x) for x in qs]
     if not qs:
@@ -366,23 +353,29 @@ def aggregate_quantiles(pix_values: DataFrame, wm, qs,
         raise ValueError("'q' is the quantile output column — rename "
                          "value_col / dims")
     pix_values, dims = _promote_var(pix_values, dims)
-    ranked = _ranked_by_weight(pix_values, wm, dims, value_col,
-                               broadcast_overlaps)
+    joined, join = _weighted_fact_join(pix_values, wm, broadcast_overlaps)
     v = F.col(value_col)
+    w_all = Window.partitionBy("poly_idx", *dims)
+    w_run = (w_all.orderBy(v.asc(), F.col("pix_idx").asc())
+                  .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    ranked = (joined.filter(_finite(v))
+                    .withColumn("_cw", F.sum("_w").over(w_run))
+                    .withColumn("_tw", F.max(F.col("_cw")).over(w_all)))
     aggs = [F.min(F.when(F.col("_cw") >= F.lit(x) * F.col("_tw"), v))
              .alias(f"_q{i}") for i, x in enumerate(qs)]
-    wide = ranked.groupBy("poly_idx", *dims).agg(*aggs)
     # melt wide -> long with explode over literal (q, value) structs — no
     # SQL-string interpolation, so any legal column name works unchanged
     melted = F.explode(F.array(*[
         F.struct(F.lit(x).cast("double").alias("q"),
                  F.col(f"_q{i}").alias(value_col))
         for i, x in enumerate(qs)])).alias("_s")
-    res = (wide.select("poly_idx", *dims, melted)
-               .select("poly_idx", *dims, F.col("_s.q").alias("q"),
-                       F.col("_s").getField(value_col).alias(value_col)))
-    return _merge_attrs(res, pix_values.sparkSession, wm, dims + ["q"],
-                        value_col)
+    res, _ = _materialize(
+        ranked.groupBy("poly_idx", *dims).agg(*aggs)
+              .select("poly_idx", *dims, melted)
+              .select("poly_idx", *dims, F.col("_s.q").alias("q"),
+                      F.col("_s").getField(value_col).alias(value_col)),
+        "aggregate_quantiles", join)
+    return _merge_attrs(res, wm, dims + ["q"], value_col)
 
 
 def aggregate_stats(pix_values: DataFrame, wm, dims=("var", "t"),
@@ -408,25 +401,25 @@ def aggregate_stats(pix_values: DataFrame, wm, dims=("var", "t"),
     if clash:
         raise ValueError(f"dims/value_col collide with the stat output "
                          f"column(s) {sorted(clash)} — rename them")
-    joined = _weighted_fact_join(pix_values, wm, broadcast_overlaps)
-    v = F.col(value_col)
-    finite = joined.filter(_finite(v))
-    agg = (finite.groupBy("poly_idx", *dims)
-                 .agg(F.sum("_w").alias("_sw"),
-                      F.sum(v * F.col("_w")).alias("_swv"),
-                      F.sum(v * v * F.col("_w")).alias("_swv2"),
-                      F.min(v).alias("min"),
-                      F.max(v).alias("max"),
-                      F.count(F.lit(1)).alias("n_valid")))
+    joined, join = _weighted_fact_join(pix_values, wm, broadcast_overlaps)
+    v, w = F.col(value_col), F.col("_w")
+    agg, _ = _materialize(
+        joined.filter(_finite(v))
+              .groupBy("poly_idx", *dims)
+              .agg(F.sum(w).alias("_sw"),
+                   F.sum(v * w).alias("_swv"),
+                   F.sum(v * v * w).alias("_swv2"),
+                   F.min(v).alias("min"),
+                   F.max(v).alias("max"),
+                   F.count(F.lit(1)).alias("n_valid")),
+        "aggregate_stats", join)
     mean = F.col("_swv") / F.col("_sw")
     res = (agg.withColumn("mean", mean)
               .withColumn("variance", F.greatest(
                   F.col("_swv2") / F.col("_sw") - mean * mean, F.lit(0.0)))
               .select("poly_idx", *dims, "mean", "variance", "min", "max",
                       F.col("n_valid").cast("long").alias("n_valid")))
-    out = _merge_attrs(res, pix_values.sparkSession, wm, dims,
-                       ["mean", "variance", "min", "max"])
+    out = _merge_attrs(res, wm, dims, ["mean", "variance", "min", "max"])
     # a zero-overlap polygon has zero finite terms, not an unknown count
     return out.withColumn("n_valid",
                           F.coalesce("n_valid", F.lit(0)).cast("long"))
-

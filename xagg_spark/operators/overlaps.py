@@ -295,9 +295,6 @@ def _refine_factory(rings_by_poly: dict, epsg: int,
                              - v[:, :, 1] * np.roll(v[:, :, 0], -1, axis=1))
                     convex = np.all(cross >= 0.0, axis=1) | \
                         np.all(cross <= 0.0, axis=1)
-                    if counters is not None:
-                        counters[0].add(int(len(todo)))
-                        counters[1].add(int((~convex).sum()))
                     acc = np.zeros(len(todo))
                     for ring, sgn in zip(rings, signs):
                         acc[convex] += sgn * _clip.clip_areas_batch(
@@ -312,6 +309,10 @@ def _refine_factory(rings_by_poly: dict, epsg: int,
                 # drops line/point intersections — core.py:492-496): anything
                 # below 1e-10 of the pixel's own area is FP noise, not overlap
                 keep = area > quad_area * 1e-10
+                if counters is not None and len(todo):
+                    # overlap rows, not candidates: only retained pixels
+                    counters[0].add(int(keep[todo].sum()))
+                    counters[1].add(int(keep[todo[~convex]].sum()))
                 if keep.any():
                     out_poly.append(np.full(int(keep.sum()), pidx, dtype=np.int64))
                     out_pix.append(grp["pix_idx"].to_numpy()[keep])
@@ -355,7 +356,8 @@ class WeightMap:
                                   # there — the sorted buckets merge-stream,
                                   # and the hint would flip them to a
                                   # hash-build of a whole bucket per task
-    n_boundary_refined: int = 0   # pixels refined through the batched clip
+    n_boundary_refined: int = 0   # overlap rows whose area the boundary
+                                  # clip computed (<= n_rows unwrapped)
     n_nonconvex_fallback: int = 0  # of those, non-convex-quad per-pixel
                                    # fallbacks (>1% warns at build time)
     _blocks: list = field(default_factory=list)  # the materialized
@@ -708,9 +710,9 @@ def _overlap_core(spark: SparkSession, grid, polys: PolygonSet,
             salt * spark.sparkContext.defaultParallelism,
             F.col("poly_idx"), F.pmod(F.col("pix_idx"), F.lit(salt)))
     # fallback diagnostics (VERDICT r2 "What's wrong #4"): count boundary
-    # pixels and the non-convex-quad per-pixel fallback among them, so a
-    # pathological grid can't silently route millions of pixels through
-    # the slow path
+    # overlap rows and the non-convex-quad per-pixel fallback among them,
+    # so a pathological grid can't silently route millions of pixels
+    # through the slow path
     acc_boundary = spark.sparkContext.accumulator(0)
     acc_nonconvex = spark.sparkContext.accumulator(0)
     refined_edge = edge_cand.select(*cols).mapInPandas(

@@ -14,10 +14,12 @@ def free_local_checkpoint(df) -> None:
     otherwise live until the JVM GCs the RDD, so iterative algorithms
     (label propagation, batched overlap builds) that checkpoint per
     round accumulate storage linearly and degrade the whole session.
-    Reaches the LogicalRDD directly; best-effort (silently ignores
-    non-checkpointed plans)."""
+    Reaches the LogicalRDD directly and frees it via unpersistRDD
+    (RDD.unpersist logs a lineage-truncated WARN per block); best-effort
+    (silently ignores non-checkpointed plans)."""
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
     except Exception:
         try:
             df.unpersist()
