@@ -155,13 +155,14 @@ def _skew_polys_bench():
     """Hot-cell skew fixture at domain scale (VERDICT r4 ask #2): 200
     coastline-complexity polygons (1024-vertex ellipses, ~3 deg across)
     all inside one lat-thin band (lat 0..3).  pixel_geometry partitions
-    the 2.88M-pixel grid into 128 pix_idx-range lat bands (~9 lat rows
-    each), so every boundary candidate lands on the handful of partitions
-    holding the hot band — unsalted, the refine UDF (per-row cost
-    proportional to the 1024 edges) straggles there while the rest of the
-    machine idles.  salt=4 hash-salts the boundary candidates on
-    (poly_idx, pix_idx % 4) across 128 partitions before the refine UDF
-    (measured r5: salted ~1.6x faster than unsalted on this fixture)."""
+    the 2.88M-pixel grid into one pix_idx-range lat band per core (32
+    bands of ~37 lat rows at local[32]), so every boundary candidate lands
+    on the one or two partitions holding the hot band — unsalted, the
+    refine UDF (per-row cost proportional to the 1024 edges) straggles
+    there while the rest of the machine idles.  salt=4 hash-salts the
+    boundary candidates on (poly_idx, pix_idx % 4) across 4 x cores
+    partitions before the refine UDF (measured r5: salted ~1.6x faster
+    than unsalted on this fixture)."""
     from xagg_spark.polygons import PolygonSet
     rings, names = [], []
     th = np.arange(1024) * (2.0 * np.pi / 1024)

@@ -4,14 +4,18 @@ neither the raw-area checkpoint(s) nor the polygon cover the build made
 for itself — so repeated builds in one session do not pile up storage
 until the ContextCleaner's next GC."""
 
+import numpy as np
 import pandas as pd
 
 from xagg_spark.grid import GridSpec
 from xagg_spark.io.weightmap_io import (read_wm, resume_pixel_overlaps,
                                         save_weightmap)
+from xagg_spark.operators import (aggregate, aggregate_quantile,
+                                  pixel_geometry, pixel_overlaps)
 from xagg_spark.operators import overlaps as _ov
-from xagg_spark.operators import pixel_overlaps
+from xagg_spark.operators.knn import knn_pixels
 from xagg_spark.polygons import PolygonSet, rect_ring
+from xagg_spark.session import free_local_checkpoint
 
 GRID = GridSpec(lat_edge=0.0, lon_edge=0.0, dlat=0.5, dlon=0.5,
                 nlat=40, nlon=40, tile_h=20, tile_w=20)
@@ -56,7 +60,6 @@ def test_caller_prep_survives_the_build(spark):
     for _ in range(2):
         pixel_overlaps(spark, GRID, _polys(), _prep=prep).unpersist()
         assert _persisted(spark) - before == cover
-    from xagg_spark.session import free_local_checkpoint
     free_local_checkpoint(prep[1])
 
 
@@ -83,3 +86,47 @@ def test_loaded_weightmap_unpersist_releases_a_cache(spark, tmp_path):
     assert loaded.overlaps.is_cached
     loaded.unpersist()
     assert not loaded.overlaps.is_cached
+
+
+def test_straight_build_has_one_block_partition_per_core_and_branch(spark):
+    """The pixels are split one partition per core, so the raw-area block
+    (the full-cell branch unioned with the refine branch) has at most two
+    partitions per core: a finer pixel split pays the fixed start-up cost
+    of a Python refine task once per extra partition."""
+    wm = pixel_overlaps(spark, GRID, _polys())
+    try:
+        n = wm._blocks[0].rdd.getNumPartitions()
+        assert n <= 2 * spark.sparkContext.defaultParallelism
+    finally:
+        wm.unpersist()
+
+
+def test_free_local_checkpoint_frees_zonal_and_knn_results(spark):
+    """A zonal result is a lazy merge over its call's checkpoint and a kNN
+    result a projection over its rounds' checkpoints: freeing the result
+    frees them all, and leaves the weightmap's own blocks alone."""
+    wm = pixel_overlaps(spark, GRID, _polys())
+    rng = np.random.default_rng(0)
+    pix = spark.createDataFrame(pd.DataFrame({
+        "pix_idx": np.repeat(np.arange(GRID.nlat * GRID.nlon), 2),
+        "var": "tas", "t": np.tile([0, 1], GRID.nlat * GRID.nlon),
+        "value": rng.uniform(0.0, 10.0, 2 * GRID.nlat * GRID.nlon)}))
+    pixels = pixel_geometry(spark, GRID).select("pix_idx", "lat", "lon")
+    centers = pd.DataFrame({"q_id": [0, 1], "c_lat": [5.0, 12.0],
+                            "c_lon": [5.0, 1.0]})
+    try:
+        before = _persisted(spark)
+        for make in (lambda: aggregate(pix, wm),
+                     lambda: aggregate_quantile(pix, wm, q=0.5),
+                     # a small first radius: several rounds, so the result
+                     # unions the accepted rows of several checkpoints
+                     lambda: knn_pixels(spark, pixels, centers, k=40,
+                                        radius_deg=0.3)):
+            res = make()
+            assert len(res.toPandas()) > 0
+            assert _persisted(spark) - before
+            free_local_checkpoint(res)
+            assert not _persisted(spark) - before
+        assert wm.overlaps.count() == wm.n_rows     # its blocks survive
+    finally:
+        wm.unpersist()

@@ -1356,8 +1356,8 @@ WITH t AS (
 ),
 c AS (
   SELECT doc_id, source,
-         COALESCE(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_prev
+         CAST(COALESCE(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_prev
   FROM t
 )
 SELECT doc_id, source, cum_prev // 512 AS chunk, cum_prev % 512 AS offset

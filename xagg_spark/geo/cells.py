@@ -209,38 +209,50 @@ def _rasterize_edges(lons, lats, pads, res, x0, x1, y0, y1) -> np.ndarray:
     window, each edge expanded by its curve pad (degrees): the true
     projected-straight edge curve stays within pad of the lon/lat chord
     (geo.ellipsoid.edge_curve_pads), so every cell the true boundary touches
-    gets marked."""
+    gets marked.
+
+    Vectorized over (edge, column) pairs: each pair marks one y-run of its
+    column (the edge clipped to the column's lon span widened by pad), and
+    the runs are summed into a difference array along y, then cumsum'd."""
     n = 1 << res
     cw, ch = 360.0 / n, 180.0 / n
     nx, ny = x1 - x0 + 1, y1 - y0 + 1
-    mark = np.zeros((nx, ny), dtype=bool)
-    ex0, ey0 = lons, lats
-    ex1, ey1 = np.roll(lons, -1), np.roll(lats, -1)
-    if pads is None:
-        pads = np.zeros(len(lons))
-    # a near-vertical edge (bx - ax ~ 1e-309) overflows t to +-inf, which
-    # the clip to [0, 1] turns into the edge's whole y-range
-    with np.errstate(over="ignore"):
-        for k in range(len(lons)):
-            ax, ay, bx, by = ex0[k], ey0[k], ex1[k], ey1[k]
-            pad = float(pads[k])
-            gx0 = int(np.floor((min(ax, bx) - pad + 180.0) / cw))
-            gx1 = int(np.floor((max(ax, bx) + pad + 180.0) / cw))
-            for gx in range(max(gx0, x0), min(gx1, x1) + 1):
-                # segment y-range within this column (clip segment to the
-                # column lon span widened by pad; conservative)
-                cxa = -180.0 + gx * cw - pad
-                cxb = cxa + cw + 2.0 * pad
-                if ax == bx:
-                    ylo, yhi = min(ay, by), max(ay, by)
-                else:
-                    t0 = np.clip((cxa - ax) / (bx - ax), 0.0, 1.0)
-                    t1 = np.clip((cxb - ax) / (bx - ax), 0.0, 1.0)
-                    ya_ = ay + t0 * (by - ay)
-                    yb_ = ay + t1 * (by - ay)
-                    ylo, yhi = min(ya_, yb_), max(ya_, yb_)
-                gy0 = max(int(np.floor((ylo - pad + 90.0) / ch)), y0)
-                gy1 = min(int(np.floor((yhi + pad + 90.0) / ch)), y1)
-                if gy1 >= gy0:
-                    mark[gx - x0, gy0 - y0:gy1 - y0 + 1] = True
-    return mark
+    ax = np.asarray(lons, dtype=np.float64)
+    ay = np.asarray(lats, dtype=np.float64)
+    bx, by = np.roll(ax, -1), np.roll(ay, -1)
+    pad = (np.zeros(len(ax)) if pads is None
+           else np.asarray(pads, dtype=np.float64))
+    # each edge's columns, clipped to the window
+    gx0 = np.maximum(np.floor((np.minimum(ax, bx) - pad + 180.0) / cw), x0)
+    gx1 = np.minimum(np.floor((np.maximum(ax, bx) + pad + 180.0) / cw), x1)
+    ncol = np.maximum(gx1 - gx0 + 1, 0).astype(np.int64)
+    first = np.cumsum(ncol) - ncol
+    diff = np.zeros(nx * (ny + 1), dtype=np.int64)
+    # edge chunks of about 2^20 pairs bound the temporaries
+    for k in np.split(np.arange(len(ax)),
+                      np.flatnonzero(np.diff(first >> 20)) + 1):
+        e = np.repeat(k, ncol[k])
+        if not len(e):
+            continue
+        gx = gx0[e] + (np.arange(len(e)) - (first[e] - first[k[0]]))
+        p, ex, ey = pad[e], ax[e], ay[e]
+        dx, dy = bx[e] - ex, by[e] - ey
+        cxa = -180.0 + gx * cw - p
+        cxb = cxa + cw + 2.0 * p
+        # a near-vertical edge (dx ~ 1e-309) overflows t to +-inf, which
+        # the clip to [0, 1] turns into the edge's whole y-range
+        with np.errstate(over="ignore", divide="ignore", invalid="ignore"):
+            ya = ey + np.clip((cxa - ex) / dx, 0.0, 1.0) * dy
+            yb = ey + np.clip((cxb - ex) / dx, 0.0, 1.0) * dy
+        vert = ex == bx[e]
+        ylo = np.where(vert, np.minimum(ey, by[e]), np.minimum(ya, yb))
+        yhi = np.where(vert, np.maximum(ey, by[e]), np.maximum(ya, yb))
+        gy0 = np.maximum(np.floor((ylo - p + 90.0) / ch), y0)
+        gy1 = np.minimum(np.floor((yhi + p + 90.0) / ch), y1)
+        ok = gy1 >= gy0
+        row = (gx[ok] - x0).astype(np.int64) * (ny + 1)
+        diff += np.bincount(row + (gy0[ok] - y0).astype(np.int64),
+                            minlength=len(diff))
+        diff -= np.bincount(row + (gy1[ok] - y0 + 1).astype(np.int64),
+                            minlength=len(diff))
+    return np.cumsum(diff.reshape(nx, ny + 1), axis=1)[:, :ny] > 0

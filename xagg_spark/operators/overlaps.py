@@ -97,14 +97,14 @@ def _grid_wraps(grid) -> bool:
 # pixel geometry
 # ---------------------------------------------------------------------------
 
-def pixel_geometry(spark: SparkSession, grid, num_partitions: int | None = None,
+def pixel_geometry(spark: SparkSession, grid,
                    weights_pdf: pd.DataFrame | None = None) -> DataFrame:
     """Long pixel-geometry DataFrame: (pix_idx, iy, ix, lat, lon, lat0, lat1,
     lon0, lon1[, weight]).
 
-    Built from ``spark.range`` + broadcast per-axis bounds (get_bnds
-    semantics): pure JVM-side column arithmetic, no decode, no Python in the
-    plan.  ``weights_pdf`` (pix_idx, weight) merges an additional weight grid
+    Built from ``spark.range`` (one pix_idx range per core) + broadcast
+    per-axis bounds (get_bnds semantics): pure JVM-side column arithmetic,
+    no decode, no Python in the plan.  ``weights_pdf`` (pix_idx, weight) merges an additional weight grid
     (reference process_weights same-grid fast path, core.py:171-225).
     """
     axes = grid.with_bounds()
@@ -119,7 +119,7 @@ def pixel_geometry(spark: SparkSession, grid, num_partitions: int | None = None,
     df_lat = spark.createDataFrame(lat_pdf)
     df_lon = spark.createDataFrame(lon_pdf)
     n = nlat * nlon
-    base = spark.range(n, numPartitions=num_partitions) \
+    base = spark.range(n) \
         .select(F.expr(f"id div {nlon}").alias("iy"),
                 F.expr(f"id % {nlon}").alias("ix"),
                 F.col("id").alias("pix_idx"))
@@ -525,8 +525,12 @@ def pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
 
     grid: GridSpec or AxesGrid.  polys: PolygonSet.  weights_pdf: optional
     (pix_idx, weight) additional weight grid already on this grid (different
-    grids go through operators.regrid first).  salt>0 repartitions candidates
-    to `salt` x parallelism before the refine UDF for hot-cell skew.
+    grids go through operators.regrid first).  The pixels are split one
+    partition per core, so a build runs one refine Python task per core.
+    salt>0 is the remedy for hot-band skew (many boundary candidates in a
+    few pixel ranges): it hash-repartitions the boundary candidates into
+    `salt` x cores refine tasks, each paying the fixed per-Python-task
+    cost.
     _prep: a (res, df_cover) pair from _overlap_prep, for callers that run
     MANY builds over the same (grid, polys) — skips recomputing the polygon
     cover per call; the caller owns (and frees) it.  _batch_max_rings
@@ -576,12 +580,12 @@ def pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
         if not silent:
             print(f"building overlaps in {len(batches)} polygon batches...")
 
-    # finer-than-core-count tasks: the candidate load per pixel range is
-    # geographically uneven (polygon-dense bands produce more refine work),
-    # so 4x parallelism partitions keep stragglers short
-    pixels = pixel_geometry(spark, grid, weights_pdf=weights_pdf,
-                            num_partitions=4 * spark.sparkContext
-                            .defaultParallelism)
+    # one pixel partition per core (spark.range's default): each refine
+    # task is a Python task whose start-up costs ~0.26 s (pyspark 4.1,
+    # 4 vCPUs) — more than the whole refine of the perfbench geo build
+    # (0.40 core-s) — so finer partitions cost more than the stragglers
+    # they shorten; hot-band skew is `salt`'s job
+    pixels = pixel_geometry(spark, grid, weights_pdf=weights_pdf)
     if not silent:
         print("calculating overlaps between pixels and output polygons...")
     blocks, n_boundary, n_nonconvex = [], 0, 0

@@ -8,19 +8,33 @@ from pyspark.sql import SparkSession
 
 
 def free_local_checkpoint(df) -> None:
-    """Free a localCheckpoint'ed DataFrame's materialized blocks NOW.
+    """Free the materialized blocks of every localCheckpoint'ed leaf of
+    ``df``'s plan NOW.
 
     DataFrame.unpersist is a no-op for checkpointed plans — the blocks
     otherwise live until the JVM GCs the RDD, so iterative algorithms
     (label propagation, batched overlap builds) that checkpoint per
     round accumulate storage linearly and degrade the whole session.
-    Reaches the LogicalRDD directly and frees it via unpersistRDD
-    (RDD.unpersist logs a lineage-truncated WARN per block); best-effort
-    (silently ignores non-checkpointed plans)."""
+    The leaves may sit under lazy steps: a zonal result is a merge over
+    its call's checkpoint, a kNN result a projection over its rounds'
+    checkpoints.  Each is freed via unpersistRDD (RDD.unpersist logs a
+    lineage-truncated WARN per block); a plan with no such leaf (a
+    parquet scan) falls back to DataFrame.unpersist, releasing a cache.
+    Best-effort: errors are ignored."""
+    ids = set()
     try:
-        rdd = df._jdf.queryExecution().analyzed().rdd()
-        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+        while leaves.hasNext():
+            leaf = leaves.next()
+            if (leaf.getClass().getSimpleName() == "LogicalRDD"
+                    and leaf.rdd().isLocallyCheckpointed()):
+                ids.add(leaf.rdd().id())
+        sc = df.sparkSession.sparkContext._jsc.sc()
+        for i in ids:
+            sc.unpersistRDD(i, False)
     except Exception:
+        pass
+    if not ids:
         try:
             df.unpersist()
         except Exception:
