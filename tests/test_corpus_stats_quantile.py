@@ -125,7 +125,7 @@ def test_stratified_sample_guards(spark):
 
 def _toy_wm_and_facts(spark, values_by_pix, weights_by_pix, npoly=1):
     """One polygon overlapping len(values) pixels with given rel weights."""
-    from xagg_spark.operators.overlaps import WeightMap
+    from xagg_spark.operators.overlaps import WeightMap, poly_table_of
     from xagg_spark.polygons import PolygonSet, rect_ring
 
     rows = []
@@ -137,8 +137,8 @@ def _toy_wm_and_facts(spark, values_by_pix, weights_by_pix, npoly=1):
     ov = spark.createDataFrame(pd.DataFrame(rows))
     polys = PolygonSet([rect_ring(0, 0, 1, 1) for _ in range(npoly)],
                        pd.DataFrame({"name": [f"p{i}" for i in range(npoly)]}))
-    wm = WeightMap(ov, polys, grid=None, epsg=6933, has_weights=False,
-                   n_rows=len(rows))
+    wm = WeightMap(ov, polys, grid=None, epsg=6933,
+                   poly_table=poly_table_of(ov), has_weights=False)
     facts = spark.createDataFrame(pd.DataFrame(
         [{"pix_idx": i, "var": "v", "t": 0, "value": float(v)}
          for i, v in enumerate(values_by_pix)]))

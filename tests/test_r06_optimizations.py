@@ -252,14 +252,14 @@ def test_zonal_calls_checkpoint_once(spark, caplog):
 def test_aggregate_quantile_rejects_q_named_columns(spark):
     """aggregate_quantile is aggregate_quantiles([q]) without the q
     column, so a dim or value column named q raises as it does there."""
-    from xagg_spark.operators.overlaps import WeightMap
+    from xagg_spark.operators.overlaps import WeightMap, poly_table_of
     from xagg_spark.operators.aggregate import aggregate_quantile
 
     ov = spark.createDataFrame(pd.DataFrame(
         {"poly_idx": [0], "pix_idx": [0], "rel_area": [1.0],
          "lat": [0.0], "lon": [0.0]}))
     wm = WeightMap(ov, PolygonSet([rect_ring(0, 0, 1, 1)]), grid=None,
-                   epsg=6933, n_rows=1)
+                   epsg=6933, poly_table=poly_table_of(ov))
     facts = spark.createDataFrame(pd.DataFrame(
         {"pix_idx": [0], "var": ["v"], "q": [0], "value": [1.0]}))
     with pytest.raises(ValueError, match="'q' is the quantile output"):

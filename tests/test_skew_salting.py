@@ -4,10 +4,12 @@
 The skew fixture concentrates every polygon in one small neighborhood, so
 the cell-prefilter candidate set lands in the few pixel-range partitions
 that hold the hot band — the refine stage straggles on those tasks.
-``pixel_overlaps(salt=N)`` round-robins candidates to N x parallelism
-partitions before the refine UDF.  These tests pin:
+``pixel_overlaps(salt=N)`` hash-repartitions the boundary candidates on
+(poly_idx, pix_idx % N) into N x parallelism partitions before the refine
+UDF.  These tests pin:
 
-1. the salted plan really inserts the round-robin exchange before refine;
+1. the salted plan really inserts that hash exchange (not a round-robin)
+   before refine;
 2. the salted candidate distribution is balanced where the unsalted one is
    concentrated (the straggler actually moves);
 3. salted and unsalted results are value-identical (the oracle twin is

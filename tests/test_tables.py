@@ -197,9 +197,6 @@ def test_copartitioned_read_verifies_integrity(spark, tmp_path):
     with open(mpath, "w") as f:
         _json.dump(man, f)
 
-    # opt-out for already-validated pipelines
-    read_copartitioned(spark, "integ", polys, grid, wm.epsg, verify=False)
-
     for t in ("integ_fact", "integ_overlaps"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 

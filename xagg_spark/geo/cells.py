@@ -95,14 +95,13 @@ def cover_bbox(lon0: float, lat0: float, lon1: float, lat1: float, res: int) -> 
     return np.unique(cell_id(res, gx.ravel(), gy.ravel()))
 
 
-def pick_resolution(pixel_deg: float, target_pixels_per_cell: float = 4.0) -> int:
-    """Choose a resolution so one cell holds ~target_pixels_per_cell pixels
-    per axis-squared — keeps pixel->cell fan-out ~1 while the polygon cover
-    stays small.  Clamped to [0, MAX_RES]."""
+def pick_resolution(pixel_deg: float) -> int:
+    """Choose a resolution whose cells span ~2 pixels per axis (~4 pixels
+    a cell) — keeps pixel->cell fan-out ~1 while the polygon cover stays
+    small.  Clamped to [0, MAX_RES]."""
     if pixel_deg <= 0:
         return 6
-    cell_deg = pixel_deg * np.sqrt(target_pixels_per_cell)
-    res = int(np.floor(np.log2(360.0 / cell_deg)))
+    res = int(np.floor(np.log2(360.0 / (2.0 * pixel_deg))))
     return int(np.clip(res, 0, MAX_RES))
 
 

@@ -258,66 +258,54 @@ def _table_num_buckets(spark: SparkSession, table: str) -> int | None:
     return None
 
 
-def read_copartitioned(spark: SparkSession, name: str, polys, grid, epsg,
-                       verify: bool = True):
+def read_copartitioned(spark: SparkSession, name: str, polys, grid, epsg):
     """Reload a save_copartitioned pair: (fact DataFrame, WeightMap whose
     overlap side carries the bucket distribution — joins on pix_idx against
     the fact table are exchange-free).
 
-    verify=True (default) checks the pair's integrity before handing it
-    out: both tables' catalog bucket counts must match each other AND the
-    save-time manifest, and each table's row count must match the
-    manifest's (metadata-cheap: an empty-projection count reads parquet
-    footers, not data pages).  The exchange-free join silently mis-joins
-    when the files don't honor the catalog's bucket spec — a foreign
-    writer or a hand-copied file must fail HERE, not produce wrong
-    aggregates (VERDICT r4 ask #8; mirrors read_wm's lineage check).
+    The pair's integrity is checked before it is handed out: both tables'
+    catalog bucket counts must match each other AND the save-time
+    manifest, and each table's row count must match the manifest's.  The
+    exchange-free join silently mis-joins when the files don't honor the
+    catalog's bucket spec — a foreign writer or a hand-copied file must
+    fail HERE, not produce wrong aggregates (VERDICT r4 ask #8; mirrors
+    read_wm's lineage check).
 
-    When verification ran, the VERIFIED overlap row count is carried on
-    the WeightMap (r6): the aggregate's dense-data fast path needs it, and
-    past BROADCAST_OVERLAPS_MAX_ROWS it does not change the join strategy
-    — the bucket-co-located SortMergeJoin these tables exist for.  With
-    verify=False the count stays None (no extra job; the aggregate then
-    always takes its general path)."""
-    from ..operators.overlaps import WeightMap
+    The overlap row count checked is the WeightMap's poly_table, computed
+    here in one job."""
+    from ..operators.overlaps import WeightMap, poly_table_of
     fact = spark.table(f"{name}_fact")
     overlaps = spark.table(f"{name}_overlaps")
-    n_overlaps = None
-    if verify:
-        nb_f = _table_num_buckets(spark, f"{name}_fact")
-        nb_o = _table_num_buckets(spark, f"{name}_overlaps")
-        if nb_f is None or nb_f != nb_o:
-            raise ValueError(
-                f"copartitioned pair {name!r} is not co-bucketed: "
-                f"{name}_fact has {nb_f} bucket(s), {name}_overlaps has "
-                f"{nb_o} — the exchange-free pix_idx join would mis-join; "
-                "rewrite the pair with save_copartitioned")
-        mpath = _copart_manifest_path(spark, name)
-        if mpath is not None and os.path.exists(mpath):
-            with open(mpath) as f:
-                man = json.load(f)
-            if nb_f != man["n_buckets"]:
-                raise ValueError(
-                    f"copartitioned pair {name!r} is corrupt: catalog says "
-                    f"{nb_f} buckets but the save-time manifest recorded "
-                    f"{man['n_buckets']} — the tables were rewritten or "
-                    "replaced outside save_copartitioned")
-            for tbl, df, key in ((f"{name}_fact", fact, "fact_rows"),
-                                 (f"{name}_overlaps", overlaps,
-                                  "overlaps_rows")):
-                n = df.count()
-                if n != man[key]:
-                    raise ValueError(
-                        f"copartitioned table {tbl!r} is corrupt: {n} rows "
-                        f"vs {man[key]} in the save-time manifest — "
-                        "file(s) added, removed, or truncated since "
-                        "save_copartitioned; the bucket layout can no "
-                        "longer be trusted for the exchange-free join")
-                if key == "overlaps_rows":
-                    n_overlaps = n
+    nb_f = _table_num_buckets(spark, f"{name}_fact")
+    nb_o = _table_num_buckets(spark, f"{name}_overlaps")
+    if nb_f is None or nb_f != nb_o:
+        raise ValueError(
+            f"copartitioned pair {name!r} is not co-bucketed: "
+            f"{name}_fact has {nb_f} bucket(s), {name}_overlaps has "
+            f"{nb_o} — the exchange-free pix_idx join would mis-join; "
+            "rewrite the pair with save_copartitioned")
     wm = WeightMap(overlaps=overlaps, polys=polys, grid=grid, epsg=epsg,
-                   has_weights="weight" in overlaps.columns,
-                   n_rows=n_overlaps, bucketed=True)
+                   poly_table=poly_table_of(overlaps),
+                   has_weights="weight" in overlaps.columns, bucketed=True)
+    mpath = _copart_manifest_path(spark, name)
+    if mpath is not None and os.path.exists(mpath):
+        with open(mpath) as f:
+            man = json.load(f)
+        if nb_f != man["n_buckets"]:
+            raise ValueError(
+                f"copartitioned pair {name!r} is corrupt: catalog says "
+                f"{nb_f} buckets but the save-time manifest recorded "
+                f"{man['n_buckets']} — the tables were rewritten or "
+                "replaced outside save_copartitioned")
+        for tbl, n, key in ((f"{name}_fact", fact.count(), "fact_rows"),
+                            (f"{name}_overlaps", wm.n_rows, "overlaps_rows")):
+            if n != man[key]:
+                raise ValueError(
+                    f"copartitioned table {tbl!r} is corrupt: {n} rows "
+                    f"vs {man[key]} in the save-time manifest — "
+                    "file(s) added, removed, or truncated since "
+                    "save_copartitioned; the bucket layout can no "
+                    "longer be trusted for the exchange-free join")
     return fact, wm
 
 

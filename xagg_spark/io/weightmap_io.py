@@ -5,8 +5,8 @@ CSV, /root/reference/xagg/export.py:13-68) and read_wm reloads it
 (/root/reference/xagg/core.py:30-98).  Spark-native replacement:
 
   <path>/overlaps/            parquet, partitioned by cell_bucket
-  <path>/_manifest.json       lineage: grid spec, polygon digests, per-bucket
-                              row counts + rel_area checksums, epsg
+  <path>/_manifest.json       version 2: grid spec, polygon digest, epsg,
+                              lineage = the WeightMap's poly_table
 
 Resumability (north_rule "a killed job resumes without recomputing completed
 tile groups"): pixel_overlaps work is partitioned into cell BUCKETS (hash of
@@ -57,7 +57,8 @@ def _grid_from_dict(d: dict):
 
 def save_weightmap(wm, path: str, overwrite: bool = False) -> None:
     """Persist overlaps + manifest.  FileExistsError parity with
-    /root/reference/xagg/export.py:20-21; dir removed on failure (:64-66)."""
+    /root/reference/xagg/export.py:20-21; dir removed on failure (:64-66).
+    The lineage is the carried poly_table: the write is the only job."""
     if os.path.exists(path):
         if not overwrite:
             raise FileExistsError(f"{path} already exists")
@@ -65,23 +66,15 @@ def save_weightmap(wm, path: str, overwrite: bool = False) -> None:
     try:
         ov_path = os.path.join(path, "overlaps")
         (wm.overlaps.write.mode("overwrite").parquet(ov_path))
-        stats = (wm.overlaps.groupBy("poly_idx")
-                 .agg(F.count(F.lit(1)).alias("n"),
-                      F.sum("rel_area").alias("rel_sum")).toPandas())
         manifest = {
-            "version": 1,
+            "version": 2,
             "epsg": wm.epsg,
             "has_weights": wm.has_weights,
             "grid": _grid_dict(wm.grid),
             "poly_digest": _poly_digest(wm.polys),
             "attrs": wm.polys.attrs.to_json(orient="records"),
             "rings": [[r.tolist() for r in poly] for poly in wm.polys.rings],
-            "lineage": {
-                "total_rows": int(stats["n"].sum()),
-                "per_poly": {str(int(r.poly_idx)): {"rows": int(r.n),
-                                                    "rel_sum": float(r.rel_sum)}
-                             for r in stats.itertuples()},
-            },
+            "lineage": _lineage(wm.poly_table),
             # build-health counters (VERDICT r3 ask #8): persisted so a
             # regression in projected-quad convexity — which reroutes
             # boundary pixels through per-pixel Python — can't land
@@ -100,11 +93,23 @@ def save_weightmap(wm, path: str, overwrite: bool = False) -> None:
         raise
 
 
+def _lineage(poly_table: pd.DataFrame) -> dict:
+    return {"total_rows": int(poly_table["n"].sum()),
+            "per_poly": {str(int(r.poly_idx)): {"rows": int(r.n),
+                                                "hash": int(r.h)}
+                         for r in poly_table.itertuples()}}
+
+
 def read_wm(spark: SparkSession, path: str):
-    """Reload a persisted weightmap (reference read_wm, core.py:30-98)."""
-    from ..operators.overlaps import WeightMap
+    """Reload a persisted weightmap (reference read_wm, core.py:30-98);
+    ValueError names a polygon whose recomputed poly_table row differs."""
+    from ..operators.overlaps import WeightMap, poly_table_of
     with open(os.path.join(path, "_manifest.json")) as f:
         man = json.load(f)
+    if man.get("version") != 2:
+        raise ValueError(f"weightmap at {path} has manifest version "
+                         f"{man.get('version')!r}; this build reads version "
+                         "2 — rebuild and save it again")
     overlaps = spark.read.parquet(os.path.join(path, "overlaps"))
     rings = [[np.array(r) for r in poly] for poly in man["rings"]]
     from io import StringIO
@@ -113,15 +118,20 @@ def read_wm(spark: SparkSession, path: str):
     if "poly_idx" in attrs.columns:
         attrs = attrs.drop(columns=["poly_idx"])
     polys = PolygonSet(rings, attrs)
-    # integrity check against lineage; count doubles as the carried n_rows
-    n = overlaps.count()
-    if n != man["lineage"]["total_rows"]:
-        raise ValueError(f"weightmap at {path} is corrupt: {n} rows vs "
-                         f"{man['lineage']['total_rows']} in manifest")
+    poly_table = poly_table_of(overlaps)
+    got, want = _lineage(poly_table), man["lineage"]
+    for p in sorted(set(got["per_poly"]) | set(want["per_poly"]), key=int):
+        g, w = got["per_poly"].get(p), want["per_poly"].get(p)
+        if g != w:
+            raise ValueError(f"weightmap at {path} is corrupt: polygon {p} "
+                             f"reads {g} but the manifest recorded {w}")
+    if got != want:
+        raise ValueError(f"weightmap at {path} is corrupt: {got['total_rows']}"
+                         f" rows vs {want['total_rows']} in manifest")
     rs = man.get("refine_stats", {})
     return WeightMap(overlaps=overlaps, polys=polys,
                      grid=_grid_from_dict(man["grid"]), epsg=man["epsg"],
-                     has_weights=man["has_weights"], n_rows=n,
+                     poly_table=poly_table, has_weights=man["has_weights"],
                      n_boundary_refined=int(rs.get("n_boundary_refined", 0)),
                      n_nonconvex_fallback=int(rs.get("n_nonconvex_fallback", 0)))
 
@@ -209,7 +219,7 @@ def _wm_from_agg(spark, agg: pd.DataFrame, polys, grid, weights_pdf,
     pix_idxs are loc indices in the export's stacked order; ``pix_of_loc``
     remaps them onto the rebuilt ascending grid (identity for files the
     reference itself wrote)."""
-    from ..operators.overlaps import WeightMap
+    from ..operators.overlaps import WeightMap, poly_table_of
 
     rows = {"poly_idx": [], "pix_idx": [], "lat": [], "lon": [], "rel_area": []}
     for r in agg.itertuples():
@@ -230,8 +240,8 @@ def _wm_from_agg(spark, agg: pd.DataFrame, polys, grid, weights_pdf,
     overlaps = spark.createDataFrame(pdf).localCheckpoint(eager=True)
     return WeightMap(overlaps=overlaps, polys=polys, grid=grid,
                      epsg=polys.pick_epsg(),
-                     has_weights=weights_pdf is not None, n_rows=len(pdf),
-                     _blocks=[overlaps])
+                     poly_table=poly_table_of(overlaps),
+                     has_weights=weights_pdf is not None, _blocks=[overlaps])
 
 
 # ---------------------------------------------------------------------------

@@ -29,14 +29,14 @@ outer-merges the result onto the polygon attrs.
 
 Dense certificate (for_loop): if each (poly_idx, *dims) group holds every
 overlap pixel of its polygon once, all finite, every pixel is valid and
-the denominators are the polygon's overlap weight sum — no second,
+the group's own finite-weight sum `_d` is its denominator — no second,
 per-pixel validity aggregate over the join.  The numerator reduce proves
 it per group: its finite-row count and long sum of 32-bit hash(pix_idx)
-must equal the polygon's overlap row count and hash-sum (collected
-beforehand, <= n_poly rows; exact, no overflow below 2^32 rows a group),
-mismatches counted by an Observation in the same job.  One blind spot:
-within one group, duplicated and missing pixels with an equal count and
-an equal hash-sum pass as dense.
+must equal the polygon's `n` and `h` in the WeightMap's carried
+poly_table (a local-relation broadcast: no job; exact below 2^32 rows a
+group), mismatches counted by an Observation in the same job.  One blind
+spot: within one group, duplicated and missing pixels with an equal
+count and an equal hash-sum pass as dense.
 """
 
 from __future__ import annotations
@@ -45,6 +45,8 @@ import logging
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, Window
+
+from .overlaps import pix_hash
 
 _log = logging.getLogger(__name__)
 
@@ -74,8 +76,9 @@ def _fact_overlaps_join(pix_values: DataFrame, ov: DataFrame,
     - bucketed co-partitioned tables (WeightMap.bucketed): NO hint — the
       sorted buckets merge-stream exchange-free.  Catalyst would honor a
       SHUFFLE_HASH hint here, hash-building a whole overlap bucket per
-      task (the pressure bucketing avoids) and, with n_rows=None, pinning
-      the strategy against AQE's broadcast conversion;
+      task (the pressure bucketing avoids) and, past
+      BROADCAST_OVERLAPS_MAX_ROWS, pinning the strategy against AQE's
+      broadcast conversion;
     - otherwise the join shuffles: SHUFFLE_HASH with the overlap side as
       build skips both SortMergeJoin sorts (4x bench, 23M x 15M rows:
       min-of-3 20.1s -> 6.4s); SHJ spills, AQE skew splitting stays on."""
@@ -139,9 +142,7 @@ def aggregate(pix_values: DataFrame, wm, dims=("var", "t"),
         # per-(pixel, dim-coordinate) weight masking: numerator AND
         # denominator from ONE hash aggregate over the joined tree
         res, _ = _materialize(
-            joined.groupBy("poly_idx", *dims)
-                  .agg(F.sum(F.when(_finite(v), v * w)).alias("_s"),
-                       F.sum(F.when(_finite(v), w)).alias("_d")),
+            joined.groupBy("poly_idx", *dims).agg(*_mean_sums(v, w)),
             "aggregate", join, impl)
         w_var = Window.partitionBy(*(vkeys or [F.lit(1)]))
         # _dmax == 0 over the whole variable <=> every value NaN -> NaN
@@ -155,58 +156,58 @@ def aggregate(pix_values: DataFrame, wm, dims=("var", "t"),
                   .select("poly_idx", *dims, value_col))
         return _merge_attrs(res, wm, dims, value_col)
 
-    # numerators plus the per-group fingerprint (finite-row count and
-    # hash-sum) in ONE pass over the joined tree, checked against the
-    # per-polygon table inside the same job
+    # the shared sums plus the per-group fingerprint (finite-row count
+    # and hash-sum) in ONE pass over the joined tree, checked against the
+    # carried poly_table inside the same job
     fin = _finite(v)
-    h = F.hash("pix_idx").cast("long")
-    per_poly = _collected(
-        _ov_weighted(wm).groupBy("poly_idx")
-                        .agg(F.sum("_w").alias("_denom"),
-                             F.count(F.lit(1)).alias("_n_valid"),
-                             F.sum(h).alias("_h")))
+    ptab = joined.sparkSession.createDataFrame(
+        wm.poly_table, "poly_idx long, n long, h long")
     res, dense = _materialize(
         joined.groupBy("poly_idx", *dims)
-              .agg(F.sum(F.when(fin, v * w)).alias("_s"),
+              .agg(*_mean_sums(v, w),
                    F.count(F.when(fin, 1)).alias("_c"),
-                   F.sum(F.when(fin, h)).alias("_hc"))
-              .join(F.broadcast(per_poly), "poly_idx"),
+                   F.sum(F.when(fin, pix_hash())).alias("_hc"))
+              .join(F.broadcast(ptab), "poly_idx", "left"),
         "aggregate", join, impl,
-        mismatch=((F.col("_c") != F.col("_n_valid"))
-                  | ~F.col("_hc").eqNullSafe(F.col("_h"))))
+        mismatch=~(F.col("_c").eqNullSafe(F.col("n"))
+                   & F.col("_hc").eqNullSafe(F.col("h"))))
     if not dense:
         # general path (core.py:812 + normalize drop_na, auxfuncs.py:10-53):
         # a pixel is VALID for (poly[, var]) iff it has >= 1 finite value
-        # across the non-loc dims; denom = sum of _w over valid pixels, a
-        # second two-level aggregate over the join.  A pixel absent from the
-        # fact table counts as all-NaN (the reference cube has every loc).
+        # across the non-loc dims; the denominator _d and valid count _c
+        # become the sum of _w and the count over valid pixels, a second
+        # two-level aggregate over the join.  A pixel absent from the fact
+        # table counts as all-NaN (the reference cube has every loc).
         level1 = (joined.groupBy("poly_idx", "pix_idx", *vkeys)
                         .agg(F.first("_w").alias("_w"),
                              F.max(F.when(fin, 1).otherwise(0)).alias("_af")))
-        denom = _collected(level1.filter(F.col("_af") == 1)
-                                 .groupBy("poly_idx", *vkeys)
-                                 .agg(F.sum("_w").alias("_denom"),
-                                      F.count(F.lit(1)).alias("_n_valid")))
-        res = (res.drop("_denom", "_n_valid")
+        # (collected: a local relation broadcasts with no job per scan)
+        denom = (level1.filter(F.col("_af") == 1).groupBy("poly_idx", *vkeys)
+                       .agg(F.sum("_w").alias("_d"),
+                            F.count(F.lit(1)).alias("_c")))
+        denom = res.sparkSession.createDataFrame(denom.toPandas(),
+                                                 denom.schema)
+        res = (res.drop("_d", "_c")
                   .join(F.broadcast(denom), ["poly_idx"] + vkeys, "left"))
 
     # NaN result when no valid pixels; 0.0 when valid pixels exist but
     # every term at this dim was NaN or denom == 0 (xarray skipna sum)
     res = (res.withColumn(
                 value_col,
-                F.when(F.coalesce(F.col("_n_valid"), F.lit(0)) == 0, _nan())
-                 .when(F.col("_denom") == 0.0, F.lit(0.0))
-                 .otherwise(F.coalesce(F.col("_s") / F.col("_denom"),
+                F.when(F.coalesce(F.col("_c"), F.lit(0)) == 0, _nan())
+                 .when(F.col("_d") == 0.0, F.lit(0.0))
+                 .otherwise(F.coalesce(F.col("_s") / F.col("_d"),
                                        F.lit(0.0))))
               .select("poly_idx", *dims, value_col))
     return _merge_attrs(res, wm, dims, value_col)
 
 
-def _collected(df: DataFrame) -> DataFrame:
-    """A tiny frame (<= n_poly x n_var rows) collected to the driver and
-    rebuilt as a local relation: it broadcasts with no Spark job per scan,
-    so the finishing steps stay lazy over the one checkpoint."""
-    return df.sparkSession.createDataFrame(df.toPandas(), df.schema)
+def _mean_sums(v, w) -> list:
+    """The reduce head both mean impls share: `_s` = sum of the finite
+    terms v * w, `_d` = sum of their weights."""
+    fin = _finite(v)
+    return [F.sum(F.when(fin, v * w)).alias("_s"),
+            F.sum(F.when(fin, w)).alias("_d")]
 
 
 def _materialize(reduced: DataFrame, op: str, join: str, impl=None,
@@ -278,35 +279,26 @@ def aggregate_quantile(pix_values: DataFrame, wm, q: float = 0.5,
                                broadcast_overlaps).drop("q")
 
 
-def _ov_weighted(wm) -> DataFrame:
-    """Overlap side with the weight column `_w` = rel_area * add_weight —
-    shared by the fact join head and the per-polygon certificate table."""
-    over = wm.overlaps
-    if not wm.has_weights:
-        over = over.withColumn("weight", F.lit(1.0))
-    return over.select("poly_idx", "pix_idx",
-                       (F.col("rel_area") * F.col("weight")).alias("_w"))
-
-
 def _weighted_fact_join(pix_values: DataFrame, wm,
                         broadcast_overlaps: bool | None) -> tuple:
     """The shared head of every zonal-stat entry point: weight column
     `_w` = rel_area * add_weight, then fact ⨝ overlaps on pix_idx via
     `_fact_overlaps_join`.  Returns (joined, strategy name) — 'broadcast',
     'bucketed' or 'shuffle_hash'.  The broadcast decision uses the row
-    count CARRIED on the WeightMap (pixel_overlaps/read_wm set it) — never
-    an eager count() here, which would re-execute the whole overlap DAG
-    when the caller did not persist it."""
-    ov = _ov_weighted(wm)
+    count of the WeightMap's carried poly_table — never an eager count()
+    here, which would re-execute the whole overlap DAG when the caller did
+    not persist it."""
+    over = wm.overlaps
+    if not wm.has_weights:
+        over = over.withColumn("weight", F.lit(1.0))
+    ov = over.select("poly_idx", "pix_idx",
+                     (F.col("rel_area") * F.col("weight")).alias("_w"))
     if broadcast_overlaps is None:
-        n_rows = getattr(wm, "n_rows", None)
-        broadcast_overlaps = (n_rows is not None
-                              and n_rows <= BROADCAST_OVERLAPS_MAX_ROWS)
-    bucketed = getattr(wm, "bucketed", False)
+        broadcast_overlaps = wm.n_rows <= BROADCAST_OVERLAPS_MAX_ROWS
     join = ("broadcast" if broadcast_overlaps else
-            "bucketed" if bucketed else "shuffle_hash")
-    return (_fact_overlaps_join(pix_values, ov, broadcast_overlaps, bucketed),
-            join)
+            "bucketed" if wm.bucketed else "shuffle_hash")
+    return (_fact_overlaps_join(pix_values, ov, broadcast_overlaps,
+                                wm.bucketed), join)
 
 
 def _promote_var(pix_values: DataFrame, dims) -> tuple:

@@ -338,6 +338,21 @@ def _refine_factory(rings_by_poly: dict, epsg: int,
 # the weightmap
 # ---------------------------------------------------------------------------
 
+def pix_hash():
+    """hash(pix_idx) as a long: no overflow in a sum below 2^32 rows."""
+    return F.hash("pix_idx").cast("long")
+
+
+def poly_table_of(overlaps: DataFrame, *extra) -> pd.DataFrame:
+    """The WeightMap's poly_table in ONE job over ``overlaps``: per polygon
+    with overlap rows, sorted, ``n`` rows and ``h`` = sum of `pix_hash`,
+    plus the caller's ``extra`` aggregates (the build's area totals)."""
+    return (overlaps.groupBy("poly_idx")
+                    .agg(F.count(F.lit(1)).alias("n"),
+                         F.sum(pix_hash()).alias("h"), *extra)
+                    .toPandas().sort_values("poly_idx", ignore_index=True))
+
+
 @dataclass
 class WeightMap:
     """Spark-native weightmap (reference classes.py:33-69): the long overlap
@@ -346,10 +361,9 @@ class WeightMap:
     polys: PolygonSet
     grid: object                  # GridSpec | AxesGrid
     epsg: int
+    poly_table: pd.DataFrame      # poly_table_of(overlaps), made by the job
+                                  # that makes the map; read, never re-derived
     has_weights: bool = False
-    n_rows: int | None = None     # overlap row count, carried so aggregate()
-                                  # never re-executes the overlap DAG just to
-                                  # pick a join strategy
     bucketed: bool = False        # True when overlaps comes from a bucketed
                                   # co-partitioned table (read_copartitioned):
                                   # aggregate() must NOT hint SHUFFLE_HASH
@@ -363,6 +377,10 @@ class WeightMap:
     _blocks: list = field(default_factory=list)  # the materialized
                                   # tables overlaps is a view over (one per
                                   # polygon batch); unpersist() frees each
+
+    @property
+    def n_rows(self) -> int:
+        return int(self.poly_table["n"].sum())
 
     def agg_pandas(self) -> pd.DataFrame:
         """Reconstitute the xagg-shaped `wm.agg` frame (lists per polygon,
@@ -758,13 +776,9 @@ def _finish_weightmap(spark: SparkSession, blocks: list, polys: PolygonSet,
         raw = blocks[0]
         for block in blocks[1:]:
             raw = raw.unionByName(block)
-        tot = raw.groupBy("poly_idx").agg(
-            F.sum("area").alias("_tot"),
-            F.count(F.lit(1)).alias("_n")).toPandas()
-        # count carried on the WeightMap so downstream join-strategy
-        # decisions never re-execute the overlap DAG
-        n_rows = int(tot["_n"].sum())
-        if n_rows == 0:
+        # the totals job also yields the carried poly_table
+        tot = poly_table_of(raw, F.sum("area").alias("_tot"))
+        if tot.empty:
             raise NoOverlapError()
     except BaseException:
         for block in blocks:
@@ -777,7 +791,8 @@ def _finish_weightmap(spark: SparkSession, blocks: list, polys: PolygonSet,
                    .drop("area", "_tot"))
     _warn_nonconvex_fallback(n_boundary, n_nonconvex)
     return WeightMap(overlaps=overlaps, polys=polys, grid=grid, epsg=epsg,
-                     has_weights="weight" in raw.columns, n_rows=n_rows,
+                     poly_table=tot[["poly_idx", "n", "h"]],
+                     has_weights="weight" in raw.columns,
                      n_boundary_refined=n_boundary,
                      n_nonconvex_fallback=n_nonconvex, _blocks=blocks)
 

@@ -14,8 +14,6 @@ _OPTIONS = {
     "impl": "for_loop",
     "rgrd_alg": "conservative",   # conservative | bilinear
     "nan_to_zero_regridding": True,
-    "cell_target_pixels": 4.0,    # cells sized to ~sqrt(this) pixels/axis
-    "salt": 0,                    # hot-cell salt factor (0 = AQE only)
     "psnr_gate_db": 40.0,         # lossy decode acceptance (input_hint)
 }
 
@@ -24,8 +22,6 @@ _VALIDATORS = {
     "impl": lambda v: v in ("for_loop", "dot_product", "numba"),
     "rgrd_alg": lambda v: v in ("conservative", "bilinear"),
     "nan_to_zero_regridding": lambda v: isinstance(v, bool),
-    "cell_target_pixels": lambda v: isinstance(v, (int, float)) and v > 0,
-    "salt": lambda v: isinstance(v, int) and v >= 0,
     "psnr_gate_db": lambda v: isinstance(v, (int, float)) and v > 0,
 }
 
