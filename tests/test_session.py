@@ -43,3 +43,19 @@ def test_pandas_to_spark_blocks_scratch_follows_local_dir(spark, monkeypatch,
     assert len(made) == 1
     assert os.path.dirname(made[0]) == want
     assert not os.path.exists(made[0])
+
+
+def test_pandas_to_spark_blocks_emits_no_warning(spark):
+    """The chunks are iloc row ranges: no pandas deprecation warning on
+    the way, and every row arrives once."""
+    import warnings
+
+    pdf = pd.DataFrame({"a": np.arange(10, dtype=np.int64),
+                        "b": np.linspace(0.0, 1.0, 10)})
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        # py4j sockets closed by the garbage collector, not the call
+        warnings.simplefilter("ignore", ResourceWarning)
+        got = pandas_to_spark_blocks(spark, pdf).toPandas()
+    pd.testing.assert_frame_equal(
+        got.sort_values("a").reset_index(drop=True), pdf)

@@ -194,3 +194,125 @@ def test_stale_wave_tmp_cleaned_on_zero_pending_resume(spark, tmp_path):
     assert not os.path.exists(stale)             # stale wave data removed
     want = pixel_overlaps(spark, GRID, _polys())
     assert wm.n_rows == want.n_rows
+
+
+def _assert_equals_straight(wm, want):
+    """Same (poly_idx, pix_idx) rows, rel_area within 1e-12, and the same
+    weight column when there is one."""
+    got = wm.overlaps.orderBy("poly_idx", "pix_idx").toPandas()
+    ref = want.overlaps.orderBy("poly_idx", "pix_idx").toPandas()
+    assert len(got) == len(ref) > 0
+    assert (got.poly_idx.to_numpy() == ref.poly_idx.to_numpy()).all()
+    assert (got.pix_idx.to_numpy() == ref.pix_idx.to_numpy()).all()
+    assert np.allclose(got.rel_area, ref.rel_area, rtol=0, atol=1e-12)
+    assert ("weight" in got.columns) == ("weight" in ref.columns)
+    if "weight" in got.columns:
+        assert (got.weight.to_numpy() == ref.weight.to_numpy()).all()
+
+
+def _kill_after_two_of_four(spark, ck, grid=GRID, weights_pdf=None):
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        resume_pixel_overlaps(spark, grid, _polys(), ck, n_buckets=4,
+                              weights_pdf=weights_pdf, _fail_after=2)
+
+
+def test_resume_key_covers_buckets_grid_and_weights(spark, tmp_path):
+    """A bucket committed by another build — other n_buckets, grid or
+    weight grid — is pending: the resume replaces it and the map equals
+    the straight build of the resumed call's inputs."""
+    ck = str(tmp_path / "ck_nb")
+    _kill_after_two_of_four(spark, ck)
+    wm, computed = resume_pixel_overlaps(spark, GRID, _polys(), ck,
+                                         n_buckets=3)
+    assert computed == 3
+    _assert_equals_straight(wm, pixel_overlaps(spark, GRID, _polys()))
+
+    fine = GridSpec(lat_edge=-2.0, lon_edge=-2.0, dlat=0.25, dlon=0.25,
+                    nlat=16, nlon=16, tile_h=16, tile_w=16)
+    ck = str(tmp_path / "ck_grid")
+    _kill_after_two_of_four(spark, ck)
+    wm, computed = resume_pixel_overlaps(spark, fine, _polys(), ck,
+                                         n_buckets=4)
+    assert computed == 4
+    _assert_equals_straight(wm, pixel_overlaps(spark, fine, _polys()))
+
+    pix = np.arange(GRID.nlat * GRID.nlon, dtype=np.int64)
+    w1 = pd.DataFrame({"pix_idx": pix, "weight": np.ones(len(pix))})
+    w2 = pd.DataFrame({"pix_idx": pix, "weight": (pix % 3) + 0.5})
+    ck = str(tmp_path / "ck_w")
+    _kill_after_two_of_four(spark, ck, weights_pdf=w1)
+    wm, computed = resume_pixel_overlaps(spark, GRID, _polys(), ck,
+                                         n_buckets=4, weights_pdf=w2)
+    assert computed == 4
+    _assert_equals_straight(
+        wm, pixel_overlaps(spark, GRID, _polys(), weights_pdf=w2))
+
+
+def test_resume_recomputes_bucket_short_of_its_marker(spark, tmp_path):
+    """A committed bucket whose parquet footers no longer add up to its
+    marker's row count (a part file lost after the commit) is recomputed;
+    the other committed bucket is kept."""
+    import glob
+    import os
+
+    ck = str(tmp_path / "ck_lost")
+    _kill_after_two_of_four(spark, ck)
+    lost = sorted(glob.glob(os.path.join(ck, "bucket=*", "part-*")))[0]
+    os.remove(lost)
+    wm, computed = resume_pixel_overlaps(spark, GRID, _polys(), ck,
+                                         n_buckets=4)
+    assert computed == 3
+    _assert_equals_straight(wm, pixel_overlaps(spark, GRID, _polys()))
+
+
+def test_resume_jobs_grow_with_waves_not_empty_buckets(spark, tmp_path,
+                                                       monkeypatch):
+    """A fresh resume of a ~1-pixel polygon: 12 of 16 buckets are empty
+    and commit a marker-only directory with no Spark job, and each wave
+    is one parquet write with a fixed number of jobs (the write and the
+    broadcasts it reads).  Jobs are counted by job-id delta between two
+    1-task marker jobs: the wave pool's threads do not inherit job
+    groups."""
+    from pyspark.sql import DataFrameWriter
+
+    tiny = PolygonSet([rect_ring(-1.3, -1.2, -0.9, -0.8)],
+                      pd.DataFrame({"name": ["tiny"]}))
+    sc = spark.sparkContext
+
+    def last_job_id(tag):
+        sc.setJobGroup(tag, tag)
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return max(sc.statusTracker().getJobIdsForGroup(tag))
+
+    writes = []
+    parquet = DataFrameWriter.parquet
+
+    def counting_parquet(self, *args, **kwargs):
+        writes.append(args[0] if args else kwargs.get("path"))
+        return parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting_parquet)
+    jobs = {}
+    for n_buckets, wave_size in ((16, 4), (4, 1), (16, 8), (16, 16)):
+        writes.clear()
+        before = last_job_id(f"before_{n_buckets}_{wave_size}")
+        wm, computed = resume_pixel_overlaps(
+            spark, GRID, tiny, str(tmp_path / f"ck_{n_buckets}_{wave_size}"),
+            n_buckets=n_buckets, wave_size=wave_size)
+        jobs[n_buckets, wave_size] = (
+            last_job_id(f"after_{n_buckets}_{wave_size}") - before - 1)
+        wm.unpersist()
+        assert computed == n_buckets
+        assert len(writes) == -(-n_buckets // wave_size)   # one per wave
+    # 4 waves each: 12 empty buckets of 16 cost what 4 buckets cost
+    assert jobs[16, 4] == jobs[4, 1], jobs
+    # a fixed number of jobs per wave
+    per_wave = jobs[16, 8] - jobs[16, 16]
+    assert jobs[16, 4] - jobs[16, 16] == 3 * per_wave, jobs
+    # one write job plus the wave query's broadcasts, well under the 38
+    # jobs of a build that also ran a stats job per wave and a write job
+    # per empty bucket
+    assert jobs[16, 4] <= 22, jobs

@@ -4,15 +4,17 @@ Reference: export_weightmap writes a 4-part directory (shp + HDF5 + NetCDF +
 CSV, /root/reference/xagg/export.py:13-68) and read_wm reloads it
 (/root/reference/xagg/core.py:30-98).  Spark-native replacement:
 
-  <path>/overlaps/            parquet, partitioned by cell_bucket
+  <path>/overlaps/            parquet, the normalized overlap table
   <path>/_manifest.json       version 2: grid spec, polygon digest, epsg,
                               lineage = the WeightMap's poly_table
 
 Resumability (north_rule "a killed job resumes without recomputing completed
-tile groups"): pixel_overlaps work is partitioned into cell BUCKETS (hash of
-the prefilter cell_id).  Each completed bucket writes its own parquet
-partition + manifest entry atomically (tmp -> rename).  resume_pixel_overlaps
-anti-joins pending buckets against the manifest and only computes those.
+tile groups"): resume_pixel_overlaps splits the pixels into BUCKETS,
+pix_idx % n_buckets.  Each bucket is written to its own directory
+(tmp -> atomic rename) and committed by a marker written last, which
+records the build key and the bucket's row count; a resume recomputes only
+the buckets whose marker is missing, carries another key, or disagrees
+with the row total of the bucket's parquet footers.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ import hashlib
 import json
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
@@ -34,6 +37,10 @@ from ..polygons import PolygonSet
 def _poly_digest(polys: PolygonSet) -> str:
     h = hashlib.sha256()
     for poly in polys.rings:
+        # the ring lengths too: one polygon with a hole and two polygons
+        # with the same vertices are different sets
+        h.update(np.array([len(poly)] + [len(r) for r in poly],
+                          dtype=np.int64).tobytes())
         for r in poly:
             h.update(np.ascontiguousarray(r, dtype=np.float64).tobytes())
     return h.hexdigest()[:16]
@@ -248,56 +255,76 @@ def _wm_from_agg(spark, agg: pd.DataFrame, polys, grid, weights_pdf,
 # resumable weightmap build
 # ---------------------------------------------------------------------------
 
+def _build_key(grid, polys: PolygonSet, n_buckets: int, weights_pdf) -> str:
+    """Digest of everything that decides a bucket's rows: the rings, the
+    grid, the bucket count and the additional weight grid."""
+    w = (None if weights_pdf is None else hashlib.sha256(
+        pd.util.hash_pandas_object(weights_pdf[["pix_idx", "weight"]],
+                                   index=False).to_numpy()).hexdigest())
+    return hashlib.sha256(json.dumps([_poly_digest(polys), _grid_dict(grid),
+                                      n_buckets, w]).encode()).hexdigest()
+
+
+def _read_marker(part: str, key: str) -> dict | None:
+    """The bucket directory's marker if it carries ``key`` and the row
+    total of the bucket's parquet footers (read on the driver, no Spark
+    job) equals its ``rows``; else None: the bucket is pending."""
+    import pyarrow.parquet as pq
+    try:
+        with open(os.path.join(part, "_COMMIT.json")) as f:
+            marker = json.load(f)
+        rows = sum(pq.read_metadata(os.path.join(part, name)).num_rows
+                   for name in os.listdir(part)
+                   if not name.startswith(("_", ".")))
+    except (OSError, ValueError):
+        return None
+    ok = marker.get("key") == key and marker.get("rows") == rows
+    return marker if ok else None
+
+
 def resume_pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
                           checkpoint: str, n_buckets: int = 16,
                           weights_pdf=None, _fail_after=None,
                           wave_size: int = 4):
-    """Build the weightmap in cell-bucket units, checkpointing each bucket's
-    overlap rows + a manifest entry atomically.  On restart, completed
-    buckets load from parquet; only pending buckets recompute.
+    """Build the weightmap in pixel-bucket units, committing each bucket's
+    overlap rows atomically.  On restart, committed buckets load from
+    parquet; only pending buckets recompute.
 
     Bucket = pix_idx % n_buckets: purely data-derived, so the same pixel
     lands in the same bucket at any parallelism (determinism rule).
     `_fail_after` kills the job after k buckets (test hook for the
     kill/resume scenario).
 
-    Cost control (VERDICT r3 ask #2 — the r3 shape ran 18x the straight
-    build: 12 sequential full pixel_overlaps jobs, each rebuilding the
-    polygon cover on the driver, re-broadcasting it, re-scanning the whole
-    pixel side, and persisting+counting before the write):
-    - the cover is prepared ONCE per run (_overlap_prep), shared, and
-      freed after the last wave;
-    - pending buckets run in WAVES of ``wave_size``: ONE Spark job per
-      wave computes raw areas for the wave's pixels (single scan, single
-      cover broadcast) and writes them ``partitionBy(bucket)`` to a tmp
-      dir — so the per-job fixed costs are paid per wave, not per bucket;
-    - each bucket directory is then COMMITTED individually (atomic rename
-      into the checkpoint + its own _SUCCESS marker + manifest append),
-      so resume granularity is still the bucket; a kill loses at most one
-      uncommitted wave of work.
+    The cover is prepared ONCE per run (_overlap_prep).  Pending buckets
+    run in WAVES of ``wave_size``: one parquet write per wave computes
+    the wave's raw areas (single pixel scan, single cover broadcast)
+    ``partitionBy(bucket)`` into a tmp dir, and an Observation on that
+    write counts each bucket's rows and area sum.  Each bucket directory
+    is then committed alone: atomic rename (an empty bucket gets an empty
+    directory), then its ``_COMMIT.json`` marker, the only record a
+    resume reads.  The marker holds the build key (rings, grid,
+    ``n_buckets``, weights), the row count and area sum and, on a wave's
+    last bucket, the wave's refine counters.  A bucket whose marker is
+    missing, carries another key, or disagrees with the row total of the
+    bucket's parquet footers is pending and its directory replaced.
     ``wave_size`` trades fixed-cost amortization against kill-loss
     granularity; 1 reproduces the per-bucket shape.
 
     Returns (WeightMap, n_buckets_computed_this_run).
     """
+    import glob
+
+    from pyspark.sql import Observation
+
     from ..operators.overlaps import (_finish_weightmap, _overlap_core,
                                       _overlap_prep, pixel_geometry)
     from ..session import free_local_checkpoint
 
     os.makedirs(checkpoint, exist_ok=True)
-    state_path = os.path.join(checkpoint, "_buckets.json")
-    state = {"done": [], "poly_digest": _poly_digest(polys)}
-    if os.path.exists(state_path):
-        with open(state_path) as f:
-            prev = json.load(f)
-        if prev.get("poly_digest") == state["poly_digest"]:
-            state = prev
-
-    pixels_all = pixel_geometry(spark, grid, weights_pdf=weights_pdf)
-    pending = [b for b in range(n_buckets)
-               if not (str(b) in state["done"]
-                       and os.path.exists(os.path.join(
-                           checkpoint, f"bucket={b}", "_SUCCESS")))]
+    key = _build_key(grid, polys, n_buckets, weights_pdf)
+    parts = [os.path.join(checkpoint, f"bucket={b}") for b in range(n_buckets)]
+    markers = [_read_marker(part, key) for part in parts]
+    pending = [b for b in range(n_buckets) if markers[b] is None]
     if _fail_after is not None:
         # the kill hook claims at most this many buckets, then dies — but
         # only if there actually was more work than the budget (a resume
@@ -306,127 +333,87 @@ def resume_pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
         pending = pending[:_fail_after]
     else:
         killed = False
+    pixels_all = pixel_geometry(spark, grid, weights_pdf=weights_pdf)
     prep = _overlap_prep(spark, grid, polys) if pending else None
     epsg = polys.pick_epsg()
 
-    def _commit_state():
-        tmp = state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, state_path)
-
-    # explicit schemas throughout the empty-bucket paths: a wave whose
-    # buckets ALL had zero overlap rows writes no parquet files, and schema
-    # INFERENCE (read of an empty dir, createDataFrame of an empty frame)
-    # throws — with declared schemas, empties read/write as zero rows and
-    # the buckets commit empty markers
+    # a wave whose buckets ALL had zero overlap rows writes no parquet
+    # files, and schema inference of such a read throws: the stitch reads
+    # with the declared schema, so marker-only buckets read as zero rows
     _bucket_ddl = ("poly_idx long, pix_idx long, lat double, lon double, "
                    "area double"
                    + (", weight double" if weights_pdf is not None else ""))
-    _wave_ddl = _bucket_ddl + ", bucket int"
 
-    computed = 0
     waves = [pending[w0:w0 + max(wave_size, 1)]
              for w0 in range(0, len(pending), max(wave_size, 1))]
 
     def _run_wave(wi: int, wave) -> tuple:
-        """Compute + write + stats for one wave (no commits here).  Waves
-        are INDEPENDENT (disjoint pixel buckets), so two run concurrently
-        (guide §2.6): the second wave's tasks back-fill the first's write
-        /stats tail instead of idling the cluster — the per-wave fixed
-        costs (full pixel scan, cover broadcast, stats job) overlap.
-        Commits still happen in submission order on the main thread, so
-        the state file and kill-loss semantics stay deterministic; a kill
-        now loses at most the (<= 2) in-flight uncommitted waves."""
+        """Compute + write one wave.  Waves hold disjoint buckets, so two
+        run at once (guide §2.6): the second's tasks back-fill the first's
+        write tail.  Commits happen in wave order on the calling thread,
+        so a kill loses at most the (<= 2) in-flight uncommitted waves."""
         tmpdir = os.path.join(checkpoint, f"_wave{wi}.tmp")
         shutil.rmtree(tmpdir, ignore_errors=True)
-        pix_w = pixels_all.filter(
-            F.pmod(F.col("pix_idx"), F.lit(n_buckets))
-            .isin([int(b) for b in wave]))
+        bucket = F.pmod(F.col("pix_idx"), F.lit(n_buckets))
+        pix_w = pixels_all.filter(bucket.isin([int(b) for b in wave]))
         raw, accs = _overlap_core(spark, grid, polys, pix_w, prep, epsg)
-        (raw.withColumn("bucket", F.pmod(F.col("pix_idx"), F.lit(n_buckets)))
-             .write.partitionBy("bucket").mode("overwrite").parquet(tmpdir))
-        # the write above is the wave's materialization — the refine
-        # accumulators are valid only NOW (the core is lazy); carry
-        # their totals in the build state so the stitched WeightMap and
-        # every persisted manifest see real counters, not vacuous zeros.
-        # The increment is PERSISTED only with the wave's LAST bucket
-        # commit (below): persisting it earlier would double-count when a
-        # mid-wave kill forces the wave's tail buckets to recompute.
-        # Under a kill the counters are therefore a LOWER bound (the
-        # killed wave's share is dropped); like all Spark accumulators
-        # updated in a transformation they can also overcount under task
-        # retries/speculation — diagnostic, not lineage.
-        wave_nb, wave_nc = int(accs[0].value), int(accs[1].value)
-        # per-bucket lineage stats in ONE job over the written wave
-        # (north_rule: "per-partition lineage: cell range, row counts,
-        # overlap-weight checksums") — read back from the committed bytes
-        stats = {int(r["bucket"]): r for r in
-                 spark.read.schema(_wave_ddl).parquet(tmpdir)
-                      .groupBy("bucket")
-                      .agg(F.count(F.lit(1)).alias("n"),
-                           F.sum("area").alias("area_sum")).collect()}
-        return tmpdir, stats, wave_nb, wave_nc
+        obs = Observation()
+        stats = [m for b in wave for m in (
+            F.count(F.when(F.col("bucket") == b, 1)).alias(f"n{b}"),
+            F.sum(F.when(F.col("bucket") == b, F.col("area"))).alias(f"a{b}"))]
+        (raw.withColumn("bucket", bucket).observe(obs, *stats)
+            .write.partitionBy("bucket").mode("overwrite").parquet(tmpdir))
+        # the write materialized the lazy core: the refine accumulators
+        # are valid only now.  They are persisted in the wave's LAST
+        # bucket's marker alone (a mid-wave kill recomputes the tail
+        # buckets without double-counting), so a kill or a bucket
+        # recomputed alone leaves them a LOWER bound; task retries can
+        # overcount them — diagnostic, not lineage
+        return tmpdir, obs.get, int(accs[0].value), int(accs[1].value)
 
-    from concurrent.futures import ThreadPoolExecutor
-    pool = ThreadPoolExecutor(max_workers=2) if len(waves) > 1 else None
-    futures = ([pool.submit(_run_wave, wi, wave)
-                for wi, wave in enumerate(waves)] if pool else None)
+    pool = ThreadPoolExecutor(max_workers=2)
+    futures = [pool.submit(_run_wave, wi, wave)
+               for wi, wave in enumerate(waves)]
     try:
-        for wi, wave in enumerate(waves):
-            if futures is not None:
-                tmpdir, stats, wave_nb, wave_nc = futures[wi].result()
-            else:
-                tmpdir, stats, wave_nb, wave_nc = _run_wave(wi, wave)
+        for wave, future in zip(waves, futures):
+            tmpdir, stats, wave_nb, wave_nc = future.result()
             for b in wave:
-                part = os.path.join(checkpoint, f"bucket={b}")
+                part = parts[b]
                 shutil.rmtree(part, ignore_errors=True)
                 src = os.path.join(tmpdir, f"bucket={b}")
                 if os.path.exists(src):
                     os.rename(src, part)
-                else:
-                    # bucket with no overlaps: write an empty marker partition
-                    spark.createDataFrame([], schema=_bucket_ddl) \
-                         .write.mode("overwrite").parquet(part)
-                # commit marker LAST: rename/write without it is not committed
-                open(os.path.join(part, "_SUCCESS"), "w").close()
-                st = stats.get(int(b))
-                state["done"].append(str(b))
-                state.setdefault("lineage", {})[str(b)] = {
-                    "rows": int(st["n"]) if st else 0,
-                    "area_checksum": float(st["area_sum"]) if st else 0.0}
-                if b == wave[-1]:     # wave complete: now safe to persist its
-                    rs = state.setdefault(     # refine increment exactly once
-                        "refine_stats", {"n_boundary_refined": 0,
-                                         "n_nonconvex_fallback": 0})
-                    rs["n_boundary_refined"] += wave_nb
-                    rs["n_nonconvex_fallback"] += wave_nc
-                computed += 1
-                _commit_state()
+                else:                      # no overlap rows: marker only
+                    os.makedirs(part)
+                markers[b] = {"key": key, "rows": int(stats[f"n{b}"]),
+                              "area_sum": float(stats[f"a{b}"] or 0.0)}
+                if b == wave[-1]:
+                    markers[b].update(n_boundary_refined=wave_nb,
+                                      n_nonconvex_fallback=wave_nc)
+                # the marker LAST: a directory without it is not committed
+                with open(os.path.join(part, "_COMMIT.json"), "w") as f:
+                    json.dump(markers[b], f)
             shutil.rmtree(tmpdir, ignore_errors=True)
     finally:
-        if pool is not None:
-            pool.shutdown(wait=True, cancel_futures=True)
+        pool.shutdown(wait=True, cancel_futures=True)
         if prep is not None:          # every wave has read the cover
             free_local_checkpoint(prep[1])
     # a crash between a wave's bucket commits and its rmtree above leaves
     # _wave<i>.tmp behind; a later resume with ZERO pending buckets never
     # enters the wave loop, so clean up unconditionally here — the stale
     # wave data can be GBs at scale (ADVICE r4)
-    import glob as _glob
-    for stale in _glob.glob(os.path.join(checkpoint, "_wave*.tmp")):
+    for stale in glob.glob(os.path.join(checkpoint, "_wave*.tmp")):
         shutil.rmtree(stale, ignore_errors=True)
     if killed:
-        raise RuntimeError(f"simulated failure after {computed} buckets")
+        raise RuntimeError(f"simulated failure after {len(pending)} "
+                           "buckets")
 
     # stitch: buckets hold RAW clip areas; normalize globally per polygon
     # with the same finish step as pixel_overlaps (exact A1 semantics), over
-    # the persisted bucket read
-    parts = [os.path.join(checkpoint, f"bucket={b}") for b in range(n_buckets)]
-    dfs = spark.read.parquet(*[p for p in parts if os.path.exists(os.path.join(p, "_SUCCESS"))]).persist()
-    # build-health counters accumulated at wave materialization time
-    # (possibly across several kill/resume runs via the build state)
-    rs = state.get("refine_stats", {})
-    return _finish_weightmap(spark, [dfs], polys, grid, epsg,
-                             int(rs.get("n_boundary_refined", 0)),
-                             int(rs.get("n_nonconvex_fallback", 0))), computed
+    # the persisted bucket read; the refine counters are the sum over the
+    # markers (possibly written across several kill/resume runs)
+    dfs = spark.read.schema(_bucket_ddl).parquet(*parts).persist()
+    n_boundary, n_nonconvex = (sum(m.get(c, 0) for m in markers) for c in
+                               ("n_boundary_refined", "n_nonconvex_fallback"))
+    return _finish_weightmap(spark, [dfs], polys, grid, epsg, n_boundary,
+                             n_nonconvex), len(pending)

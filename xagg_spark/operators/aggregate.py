@@ -33,10 +33,11 @@ the group's own finite-weight sum `_d` is its denominator — no second,
 per-pixel validity aggregate over the join.  The numerator reduce proves
 it per group: its finite-row count and long sum of 32-bit hash(pix_idx)
 must equal the polygon's `n` and `h` in the WeightMap's carried
-poly_table (a local-relation broadcast: no job; exact below 2^32 rows a
-group), mismatches counted by an Observation in the same job.  One blind
-spot: within one group, duplicated and missing pixels with an equal
-count and an equal hash-sum pass as dense.
+poly_table (a local-relation broadcast: one small job per query, no
+collect; exact below 2^32 rows a group), mismatches counted by an
+Observation in the same job.  One blind spot: within one group,
+duplicated and missing pixels with an equal count and an equal hash-sum
+pass as dense.
 """
 
 from __future__ import annotations
@@ -81,7 +82,9 @@ def _fact_overlaps_join(pix_values: DataFrame, ov: DataFrame,
       broadcast conversion;
     - otherwise the join shuffles: SHUFFLE_HASH with the overlap side as
       build skips both SortMergeJoin sorts (4x bench, 23M x 15M rows:
-      min-of-3 20.1s -> 6.4s); SHJ spills, AQE skew splitting stays on."""
+      min-of-3 20.1s -> 6.4s); AQE skew splitting stays on.  SHJ does
+      not spill: an overlap partition past task memory fails ("Can't
+      acquire ... to build hash relation"), no sort-merge fallback."""
     if broadcast_overlaps:
         return pix_values.join(F.broadcast(ov), "pix_idx")
     if bucketed:
@@ -181,7 +184,8 @@ def aggregate(pix_values: DataFrame, wm, dims=("var", "t"),
         level1 = (joined.groupBy("poly_idx", "pix_idx", *vkeys)
                         .agg(F.first("_w").alias("_w"),
                              F.max(F.when(fin, 1).otherwise(0)).alias("_af")))
-        # (collected: a local relation broadcasts with no job per scan)
+        # (collected: its local relation broadcasts in one small job per
+        # query that reads it, not a re-run of this aggregate)
         denom = (level1.filter(F.col("_af") == 1).groupBy("poly_idx", *vkeys)
                        .agg(F.sum("_w").alias("_d"),
                             F.count(F.lit(1)).alias("_c")))

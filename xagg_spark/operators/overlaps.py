@@ -767,8 +767,9 @@ def _finish_weightmap(spark: SparkSession, blocks: list, polys: PolygonSet,
     polygon's millions of rows in one partition.  The per-polygon totals
     are <= n_poly rows (the PolygonSet is driver-resident by
     construction), so they are collected and joined back as a
-    LOCAL-relation broadcast: the broadcast costs no Spark job per scan,
-    and rel_area is a cheap JVM project over the blocks."""
+    LOCAL-relation broadcast: one small job per query that reads the
+    overlaps (no re-run of the totals aggregate), and rel_area is a cheap
+    JVM project over the blocks."""
     from ..session import free_local_checkpoint
     try:
         if not blocks:

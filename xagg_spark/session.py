@@ -72,9 +72,10 @@ def pandas_to_spark_blocks(spark, pdf):
     try:
         n_chunks = min(max(spark.sparkContext.defaultParallelism, 1),
                        len(pdf))
-        for i, chunk in enumerate(np.array_split(pdf, n_chunks)):
-            pq.write_table(pa.Table.from_pandas(chunk.reset_index(drop=True),
-                                                preserve_index=False),
+        # iloc row ranges: array_split on the frame warns (swapaxes)
+        for i, rows in enumerate(np.array_split(range(len(pdf)), n_chunks)):
+            chunk = pdf.iloc[rows[0]:rows[-1] + 1].reset_index(drop=True)
+            pq.write_table(pa.Table.from_pandas(chunk, preserve_index=False),
                            os.path.join(d, f"part-{i:05d}.parquet"))
         return spark.read.parquet(d).localCheckpoint(eager=True)
     finally:
