@@ -147,6 +147,7 @@ def test_aggregate_dense_fast_path_equals_general_path(spark, caplog):
         (rec,) = _agg_records(caplog)
         assert (rec["op"], rec["impl"], rec["dense"]) == \
             ("aggregate", "for_loop", dense)
+        assert rec["join"] == "broadcast"      # a small map broadcasts
         assert (rec["mismatched"] == 0) is dense
         assert np.isfinite(got["value"]).all()
         _assert_matches_reference(got, ov, fact.toPandas(), n_poly=2)

@@ -92,18 +92,18 @@ def test_copartitioned_join_is_exchange_free(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS copart_t_overlaps")
 
 
-def test_fact_overlaps_join_strategy_by_shape(spark):
-    """r4 review fix: the SHUFFLE_HASH hint must apply ONLY where the join
-    genuinely shuffles.  On bucketed co-partitioned tables Catalyst WOULD
-    honor the hint (flipping the exchange-free sorted-bucket merge to a
-    per-task hash build), so aggregate's join helper must omit it there;
-    on plain inputs it must produce a ShuffledHashJoin."""
+def test_fact_overlaps_join_strategy_is_the_planners(spark):
+    """Past the broadcast decision the engine pins no join strategy: the
+    fact ⨝ overlaps join is plain, so AQE turns it into a ShuffledHashJoin
+    on shuffled inputs, and co-bucketed tables keep their exchange-free
+    SortMergeJoin.  Each join is executed first: the initial adaptive plan
+    is a SortMergeJoin, only the final one shows AQE's conversion."""
     import shutil
 
     import pandas as pd
 
     from xagg_spark.io.tables import read_copartitioned, save_copartitioned
-    from xagg_spark.operators.aggregate import _fact_overlaps_join
+    from xagg_spark.operators.aggregate import _weighted_fact_join
 
     for t in ("jstrat_fact", "jstrat_overlaps"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
@@ -117,25 +117,31 @@ def test_fact_overlaps_join_strategy_by_shape(spark):
                           grid)
     save_copartitioned(pix, wm, "jstrat", n_buckets=4)
     fact, wm2 = read_copartitioned(spark, "jstrat", polys, grid, wm.epsg)
-    assert wm2.bucketed
+
+    def executed(pix_values, w):
+        joined, join = _weighted_fact_join(pix_values, w,
+                                           broadcast_overlaps=False)
+        assert join == "planner"
+        joined.collect()
+        qe = joined._jdf.queryExecution()
+        # the overlap view's own tiny side table keeps its broadcast
+        # hint; no shuffled strategy is pinned anywhere
+        assert "strategy=shuffle" not in qe.analyzed().toString()
+        plan = qe.executedPlan().toString()
+        assert "isFinalPlan=true" in plan
+        return plan.split("== Initial Plan ==")[0]
 
     old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        ov = wm2.overlaps.select("poly_idx", "pix_idx", "rel_area")
-        jb = _fact_overlaps_join(fact, ov, broadcast_overlaps=False,
-                                 bucketed=True)
-        pb = jb._jdf.queryExecution().executedPlan().toString()
+        ps = executed(pix, wm)
+        assert "ShuffledHashJoin" in ps and "SortMergeJoin" not in ps
+        pb = executed(fact, wm2)
         assert "SortMergeJoin" in pb and "ShuffledHashJoin" not in pb
         assert "Exchange hashpartitioning(pix_idx" not in pb
-
-        ov_plain = wm.overlaps.select("poly_idx", "pix_idx", "rel_area")
-        js = _fact_overlaps_join(pix, ov_plain, broadcast_overlaps=False,
-                                 bucketed=False)
-        ps = js._jdf.queryExecution().executedPlan().toString()
-        assert "ShuffledHashJoin" in ps
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
+    wm.unpersist()
     for t in ("jstrat_fact", "jstrat_overlaps"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 

@@ -265,6 +265,27 @@ def test_resume_recomputes_bucket_short_of_its_marker(spark, tmp_path):
     _assert_equals_straight(wm, pixel_overlaps(spark, GRID, _polys()))
 
 
+def test_resume_with_fewer_buckets_deletes_the_stale_ones(spark, tmp_path):
+    """A completed 4-bucket build resumed with 3 buckets keeps no
+    bucket=3 directory, and its map equals a straight 3-bucket build."""
+    import os
+
+    ck = str(tmp_path / "ck_shrink")
+    wm4, _ = resume_pixel_overlaps(spark, GRID, _polys(), ck, n_buckets=4)
+    wm4.unpersist()
+    assert os.path.isdir(os.path.join(ck, "bucket=3"))
+    wm, computed = resume_pixel_overlaps(spark, GRID, _polys(), ck,
+                                         n_buckets=3)
+    assert computed == 3
+    assert sorted(n for n in os.listdir(ck) if n.startswith("bucket=")) == \
+        ["bucket=0", "bucket=1", "bucket=2"]
+    want, _ = resume_pixel_overlaps(spark, GRID, _polys(),
+                                    str(tmp_path / "ck_three"), n_buckets=3)
+    _assert_equals_straight(wm, want)
+    wm.unpersist()
+    want.unpersist()
+
+
 def test_resume_jobs_grow_with_waves_not_empty_buckets(spark, tmp_path,
                                                        monkeypatch):
     """A fresh resume of a ~1-pixel polygon: 12 of 16 buckets are empty

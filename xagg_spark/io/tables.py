@@ -182,28 +182,27 @@ def bucket_filter_for_bbox(grid, lon_min: float, lat_min: float,
 
 
 def save_copartitioned(pix_values: DataFrame, wm, name: str,
-                       n_buckets: int = 64, mode: str = "overwrite",
-                       single_file_buckets: bool = True) -> None:
+                       n_buckets: int = 64, mode: str = "overwrite") -> None:
     """Write the decoded fact table AND the overlap table as BUCKETED
     tables on pix_idx (same bucket count), so the aggregate's
     fact ⨝ overlaps join needs NO exchange on either side — the 100 TB
     answer to the one remaining shuffle in the pipeline (at cluster scale:
     the Iceberg ``bucket(pix_idx)`` partition transform plays this role).
 
-    single_file_buckets (default): each table is repartitioned by
-    ``HashPartitioning(pix_idx, n_buckets)`` — the EXACT expression
-    Spark's bucketed write uses for the bucket id — before the write, so
-    every task holds exactly one bucket and each bucket lands as ONE
-    sorted file.  Without it each input task writes a file per bucket it
-    touches (n_tasks x n_buckets tiny files), and — decisive for the read
-    side — Spark only trusts a bucket's sortBy metadata when the bucket
-    has at most one file, so multi-file buckets silently re-Sort both
-    sides of the "exchange-free" join on every read (guide §6 file
-    sizing + §2.4 shuffle removal).  At cluster scale keep it on and
-    raise n_buckets so one bucket ~ one 128 MB-1 GB file; the repartition
-    is the same exchange the per-read sort was paying anyway, moved to
-    write time.  The two tables are written CONCURRENTLY (guide §2.6 —
-    independent jobs back-fill each other's stragglers).
+    Each table is repartitioned by ``HashPartitioning(pix_idx,
+    n_buckets)`` — the EXACT expression Spark's bucketed write uses for
+    the bucket id — before the write, so every task holds exactly one
+    bucket and each bucket lands as ONE sorted file.  Without it each
+    input task writes a file per bucket it touches (n_tasks x n_buckets
+    tiny files), and — decisive for the read side — Spark only trusts a
+    bucket's sortBy metadata when the bucket has at most one file, so
+    multi-file buckets silently re-Sort both sides of the
+    "exchange-free" join on every read (guide §6 file sizing + §2.4
+    shuffle removal).  At cluster scale raise n_buckets so one bucket ~
+    one 128 MB-1 GB file; the repartition is the same exchange the
+    per-read sort was paying anyway, moved to write time.  The two
+    tables are written CONCURRENTLY (guide §2.6 — independent jobs
+    back-fill each other's stragglers).
 
     Tables land in the session catalog as ``<name>_fact`` /
     ``<name>_overlaps``; reload with read_copartitioned.  A
@@ -216,9 +215,7 @@ def save_copartitioned(pix_values: DataFrame, wm, name: str,
     from concurrent.futures import ThreadPoolExecutor
 
     def _write(df, table):
-        if single_file_buckets:
-            df = df.repartition(n_buckets, F.col("pix_idx"))
-        (df.write.mode(mode)
+        (df.repartition(n_buckets, F.col("pix_idx")).write.mode(mode)
            .bucketBy(n_buckets, "pix_idx").sortBy("pix_idx")
            .saveAsTable(table))
 
@@ -286,7 +283,7 @@ def read_copartitioned(spark: SparkSession, name: str, polys, grid, epsg):
             "rewrite the pair with save_copartitioned")
     wm = WeightMap(overlaps=overlaps, polys=polys, grid=grid, epsg=epsg,
                    poly_table=poly_table_of(overlaps),
-                   has_weights="weight" in overlaps.columns, bucketed=True)
+                   has_weights="weight" in overlaps.columns)
     mpath = _copart_manifest_path(spark, name)
     if mpath is not None and os.path.exists(mpath):
         with open(mpath) as f:

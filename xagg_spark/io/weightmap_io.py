@@ -306,7 +306,9 @@ def resume_pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
     ``n_buckets``, weights), the row count and area sum and, on a wave's
     last bucket, the wave's refine counters.  A bucket whose marker is
     missing, carries another key, or disagrees with the row total of the
-    bucket's parquet footers is pending and its directory replaced.
+    bucket's parquet footers is pending and its directory replaced; a
+    bucket directory past ``n_buckets`` (left by a run with more buckets)
+    is deleted.
     ``wave_size`` trades fixed-cost amortization against kill-loss
     granularity; 1 reproduces the per-bucket shape.
 
@@ -321,6 +323,12 @@ def resume_pixel_overlaps(spark: SparkSession, grid, polys: PolygonSet,
     from ..session import free_local_checkpoint
 
     os.makedirs(checkpoint, exist_ok=True)
+    # a run with more buckets left bucket=<b>, b >= n_buckets, behind: no
+    # stitch of this build reads them, so they are dead bytes
+    for name in os.listdir(checkpoint):
+        b = name[len("bucket="):]
+        if name.startswith("bucket=") and b.isdigit() and int(b) >= n_buckets:
+            shutil.rmtree(os.path.join(checkpoint, name), ignore_errors=True)
     key = _build_key(grid, polys, n_buckets, weights_pdf)
     parts = [os.path.join(checkpoint, f"bucket={b}") for b in range(n_buckets)]
     markers = [_read_marker(part, key) for part in parts]

@@ -64,32 +64,11 @@ def _finite(c):
 # larger) fact table never shuffles.  5M rows ~= 250 MB hash relation — on a
 # cluster, shipping that to each executor beats shuffling a multi-TB fact
 # table (3.8M rows on local[32]: broadcast 5.3s vs shuffle join 13.5s).
-# Larger weightmaps (continental 0.01-degree grids) take the shuffle join,
-# or no exchange at all when co-partitioned on pix_idx (io.tables).
+# Larger weightmaps (continental 0.01-degree grids) take a plain join and
+# the session's planner picks its strategy: AQE's shuffled-hash conversion
+# under spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold, else a
+# sort-merge join, or no exchange at all on co-bucketed tables (io.tables).
 BROADCAST_OVERLAPS_MAX_ROWS = 5_000_000
-
-
-def _fact_overlaps_join(pix_values: DataFrame, ov: DataFrame,
-                        broadcast_overlaps: bool, bucketed: bool) -> DataFrame:
-    """The engine's one big join, strategy by input shape:
-
-    - broadcast: the (small) overlap side ships to every task;
-    - bucketed co-partitioned tables (WeightMap.bucketed): NO hint — the
-      sorted buckets merge-stream exchange-free.  Catalyst would honor a
-      SHUFFLE_HASH hint here, hash-building a whole overlap bucket per
-      task (the pressure bucketing avoids) and, past
-      BROADCAST_OVERLAPS_MAX_ROWS, pinning the strategy against AQE's
-      broadcast conversion;
-    - otherwise the join shuffles: SHUFFLE_HASH with the overlap side as
-      build skips both SortMergeJoin sorts (4x bench, 23M x 15M rows:
-      min-of-3 20.1s -> 6.4s); AQE skew splitting stays on.  SHJ does
-      not spill: an overlap partition past task memory fails ("Can't
-      acquire ... to build hash relation"), no sort-merge fallback."""
-    if broadcast_overlaps:
-        return pix_values.join(F.broadcast(ov), "pix_idx")
-    if bucketed:
-        return pix_values.join(ov, "pix_idx")
-    return pix_values.join(ov.hint("SHUFFLE_HASH"), "pix_idx")
 
 
 def aggregate(pix_values: DataFrame, wm, dims=("var", "t"),
@@ -286,12 +265,14 @@ def aggregate_quantile(pix_values: DataFrame, wm, q: float = 0.5,
 def _weighted_fact_join(pix_values: DataFrame, wm,
                         broadcast_overlaps: bool | None) -> tuple:
     """The shared head of every zonal-stat entry point: weight column
-    `_w` = rel_area * add_weight, then fact ⨝ overlaps on pix_idx via
-    `_fact_overlaps_join`.  Returns (joined, strategy name) — 'broadcast',
-    'bucketed' or 'shuffle_hash'.  The broadcast decision uses the row
-    count of the WeightMap's carried poly_table — never an eager count()
-    here, which would re-execute the whole overlap DAG when the caller did
-    not persist it."""
+    `_w` = rel_area * add_weight, then the engine's one big join, fact ⨝
+    overlaps on pix_idx.  The engine decides only whether the overlap side
+    is broadcast; otherwise the join is plain and its strategy is the
+    planner's.  Returns (joined, strategy name) — 'broadcast' or
+    'planner'.  The broadcast decision uses the row count of the
+    WeightMap's carried poly_table — never an eager count() here, which
+    would re-execute the whole overlap DAG when the caller did not
+    persist it."""
     over = wm.overlaps
     if not wm.has_weights:
         over = over.withColumn("weight", F.lit(1.0))
@@ -299,10 +280,9 @@ def _weighted_fact_join(pix_values: DataFrame, wm,
                      (F.col("rel_area") * F.col("weight")).alias("_w"))
     if broadcast_overlaps is None:
         broadcast_overlaps = wm.n_rows <= BROADCAST_OVERLAPS_MAX_ROWS
-    join = ("broadcast" if broadcast_overlaps else
-            "bucketed" if wm.bucketed else "shuffle_hash")
-    return (_fact_overlaps_join(pix_values, ov, broadcast_overlaps,
-                                wm.bucketed), join)
+    return (pix_values.join(F.broadcast(ov) if broadcast_overlaps else ov,
+                            "pix_idx"),
+            "broadcast" if broadcast_overlaps else "planner")
 
 
 def _promote_var(pix_values: DataFrame, dims) -> tuple:
@@ -384,11 +364,11 @@ def aggregate_stats(pix_values: DataFrame, wm, dims=("var", "t"),
     reference's single mean.
 
     Everything comes out of ONE map-side-combinable hash aggregate over
-    the same fact ⨝ overlaps join as `aggregate` (broadcast / bucketed /
-    SHUFFLE_HASH by input shape) — no window, no second shuffle, so this
-    is strictly cheaper than the quantile path at any scale.  NaN terms
-    drop (skipna); a group with no finite value — and any zero-overlap
-    polygon — comes back NaN via the attr outer-merge.
+    the same fact ⨝ overlaps join as `aggregate` (`_weighted_fact_join`)
+    — no window, no second shuffle, so this is strictly cheaper than the
+    quantile path at any scale.  NaN terms drop (skipna); a group with no
+    finite value — and any zero-overlap polygon — comes back NaN via the
+    attr outer-merge.
     Returns (poly_idx, *attrs, *dims, mean, variance, min, max, n_valid).
     """
     pix_values, dims = _promote_var(pix_values, dims)

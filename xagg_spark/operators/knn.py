@@ -207,7 +207,11 @@ def _cover_df_jvm(spark: SparkSession, pending: pd.DataFrame,
 def _candidate_join(pix: DataFrame, cover: DataFrame, build: str,
                     n_pix: int, n_cover: int) -> DataFrame:
     """Equi-join on cell_id with the build side pinned by hint, so the
-    planner's size estimates never pick it."""
+    planner's size estimates never pick it.  The ``none`` hints also keep
+    AQE from broadcasting a side at runtime, which it decides from the
+    side's COMPRESSED shuffle size: without them the 10^6-center run was
+    slower and one run failed with "Not enough memory to build and
+    broadcast the table"."""
     if build == "pixels":
         return cover.join(F.broadcast(pix), "cell_id")
     if build == "cover":

@@ -364,12 +364,6 @@ class WeightMap:
     poly_table: pd.DataFrame      # poly_table_of(overlaps), made by the job
                                   # that makes the map; read, never re-derived
     has_weights: bool = False
-    bucketed: bool = False        # True when overlaps comes from a bucketed
-                                  # co-partitioned table (read_copartitioned):
-                                  # aggregate() must NOT hint SHUFFLE_HASH
-                                  # there — the sorted buckets merge-stream,
-                                  # and the hint would flip them to a
-                                  # hash-build of a whole bucket per task
     n_boundary_refined: int = 0   # overlap rows whose area the boundary
                                   # clip computed (<= n_rows unwrapped)
     n_nonconvex_fallback: int = 0  # of those, non-convex-quad per-pixel

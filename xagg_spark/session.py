@@ -51,17 +51,13 @@ def pandas_to_spark_blocks(spark, pdf):
     0.6-1.5 s): the python-sourced Arrow scan is slow even for a single
     pass, while the parquet write+scan is all native.  Values are exact
     (int64/float64/bool roundtrip losslessly).  The scratch goes under
-    ``spark.local.dir`` when set, else the system temp dir (``TMPDIR``).
-    Falls back to plain createDataFrame+checkpoint if pyarrow is
-    unavailable."""
+    ``spark.local.dir`` when set, else the system temp dir (``TMPDIR``)."""
     import shutil
     import tempfile
-    try:
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-    except ImportError:
-        return spark.createDataFrame(pdf).localCheckpoint(eager=True)
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     if len(pdf) == 0:
         return spark.createDataFrame(pdf).localCheckpoint(eager=True)
     base = spark.sparkContext.getConf().get("spark.local.dir")
@@ -115,8 +111,10 @@ def get_spark(app: str = "xagg_spark", master: str | None = None,
                  os.environ.get("XAGG_SPARK_PERIODIC_GC", "45s"))
          # let AQE flip a sort-merge join to a shuffled-hash join when the
          # RUNTIME per-partition build size is modest (guide §3.1): the
-         # decision uses actual map output sizes, not estimates, so it is
-         # safe at any scale; 128m per partition is far below task memory.
+         # decision uses actual map output sizes, not estimates.  Those
+         # are COMPRESSED shuffle bytes, so the in-memory hash relation
+         # can be several times larger (a 1g heap failed to build one);
+         # the hash build does not spill.
          .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                  os.environ.get("XAGG_SPARK_SHJ_THRESHOLD", "128m"))
          # trust bucketed tables' sortBy metadata at scan time: Spark only
